@@ -36,6 +36,18 @@ object Native {
   def minhashSig(hs: Column, k: Int): Column =
     Bridge.column(MinHashSig(Bridge.expression(hs), k))
 
+  /** Codegen'd 64-bit SimHash of a token array (see [[SimHashFp]]);
+    * seed 42 is Spark's `xxhash64(t)`.
+    */
+  def simhashFp(toks: Column, seed: Long): Column =
+    Bridge.column(SimHashFp(Bridge.expression(toks), seed))
+
+  /** Codegen'd 56 permuted-block keys of a 64-bit SimHash fingerprint
+    * (see [[SimHashBlockKeys]]); position t is table t's 40-bit key.
+    */
+  def simhashBlockKeys(fp: Column): Column =
+    Bridge.column(SimHashBlockKeys(Bridge.expression(fp)))
+
   /** Codegen'd positional-agreement count between two signatures (see
     * [[SigAgree]]) — `sigAgree(a, b) / k` estimates Jaccard.
     */

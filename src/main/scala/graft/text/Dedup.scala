@@ -1,6 +1,7 @@
 package graft.text
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.expressions.XXH64
 import org.apache.spark.sql.functions._
 
 import org.apache.spark.sql.types._
@@ -448,44 +449,24 @@ object Dedup {
     verifyJaccard(cand, sets, minJaccard)
   }
 
-  /** 64-bit SimHash over the token bag: bit i of the hash of each token
-    * votes +1/-1; the sign of the tally is bit i of the fingerprint.
-    * Per-row array-fold form — fine for composition, but higher-order
-    * functions run interpreted; [[simhashTable]] is the codegen'd path.
-    */
-  def simhash(toks: Column): Column = {
-    val masks = array((0 until 64).map(i => lit(1L << i)): _*)
-    val tallies = aggregate(
-      toks,
-      array_repeat(lit(0L), 64),
-      (acc, t) => zip_with(acc, masks,
-        (a, m) => a + when(xxhash64(t).bitwiseAND(m) =!= 0L, 1L)
-          .otherwise(-1L)))
-    aggregate(
-      zip_with(tallies, masks, (v, m) => when(v > 0, m).otherwise(0L)),
-      lit(0L), (acc, b) => acc.bitwiseOR(b))
-  }
-
-  /** (doc_id, fp) via explode → 64 codegen'd vote columns → one
-    * partially-aggregated groupBy — every operator whole-stage-codegen'd
-    * and map-side combined, unlike the interpreted array-fold form.
-    * Docs with no tokens are absent from the output (they have no
-    * fingerprint to compare anyway).
+  /** (doc_id, fp): the 64-bit SimHash of each doc's token bag — bit i
+    * of each token's `xxhash64` votes +1/−1, the sign of the tally is
+    * bit i of the fingerprint. Tokens materialize as a real column, then
+    * one codegen'd in-row loop ([[graft.functions.SimHashFp]]) folds
+    * them into the fingerprint: no per-token rows, no shuffle. Docs
+    * with a null text are absent (no fingerprint to compare); an empty
+    * text is present, since it splits into one empty token.
+    *
+    * Precondition: `idCol` is unique. The output has one row per input
+    * row; rows sharing an id are NOT merged into one fingerprint.
     */
   def simhashTable(df: DataFrame, textCol: String,
-                   idCol: String): DataFrame = {
-    val toked = df.select(col(idCol).as("doc_id"),
-      explode(TextOps.tokens(col(textCol))).as("t"))
-    val hashed = toked.select(col("doc_id"), xxhash64(col("t")).as("h"))
-    val votes = (0 until 64).map(i =>
-      sum(when(col("h").bitwiseAND(lit(1L << i)) =!= 0L, 1L)
-        .otherwise(-1L)).as(s"v$i"))
-    val tallies = hashed.groupBy("doc_id").agg(votes.head, votes.tail: _*)
-    val fp = (0 until 64).map(i =>
-        when(col(s"v$i") > 0, lit(1L << i)).otherwise(0L))
-      .reduce((a, b) => a.bitwiseOR(b))
-    tallies.select(col("doc_id"), fp.as("fp"))
-  }
+                   idCol: String): DataFrame =
+    df.select(col(idCol).as("doc_id"),
+        TextOps.tokens(col(textCol)).as("toks"))
+      .select(col("doc_id"),
+        graft.functions.Native.simhashFp(col("toks"), 42L).as("fp"))
+      .filter(col("fp").isNotNull)
 
   /** Hamming distance between two 64-bit fingerprints. */
   def hamming(a: Column, b: Column): Column = bit_count(a.bitwiseXOR(b))
@@ -525,25 +506,22 @@ object Dedup {
     * xxhash64) give 128 bits → 4×32-bit bands: the same pigeonhole
     * guarantee for hamming ≤ 3, with the random-collision floor pushed
     * to 4·n²/2^32 — negligible into the billions of documents.
-    * Output: (doc_id, fp_lo, fp_hi); same codegen'd
-    * explode→votes→one-groupBy shape as [[simhashTable]].
+    * Output: (doc_id, fp_lo, fp_hi): fp_lo is [[simhashTable]]'s
+    * fingerprint, fp_hi the same vote under `xxhash64(lit(1L), t)`, i.e.
+    * token hashes seeded with `xxhash64(1L)` — two in-row
+    * [[graft.functions.SimHashFp]] calls over one token attribute, no
+    * shuffle. Same absent/present rules and the same unique-`idCol`
+    * precondition as [[simhashTable]].
     */
   def simhashWideTable(df: DataFrame, textCol: String,
-                       idCol: String): DataFrame = {
-    val toked = df.select(col(idCol).as("doc_id"),
-      explode(TextOps.tokens(col(textCol))).as("t"))
-    val hashed = toked.select(col("doc_id"),
-      xxhash64(col("t")).as("h1"), xxhash64(lit(1L), col("t")).as("h2"))
-    def votes(h: String, tag: String) = (0 until 64).map(i =>
-      sum(when(col(h).bitwiseAND(lit(1L << i)) =!= 0L, 1L)
-        .otherwise(-1L)).as(s"$tag$i"))
-    val all = votes("h1", "a") ++ votes("h2", "b")
-    val tallies = hashed.groupBy("doc_id").agg(all.head, all.tail: _*)
-    def fp(tag: String) = (0 until 64).map(i =>
-        when(col(s"$tag$i") > 0, lit(1L << i)).otherwise(0L))
-      .reduce((a, b) => a.bitwiseOR(b))
-    tallies.select(col("doc_id"), fp("a").as("fp_lo"), fp("b").as("fp_hi"))
-  }
+                       idCol: String): DataFrame =
+    df.select(col(idCol).as("doc_id"),
+        TextOps.tokens(col(textCol)).as("toks"))
+      .select(col("doc_id"),
+        graft.functions.Native.simhashFp(col("toks"), 42L).as("fp_lo"),
+        graft.functions.Native.simhashFp(col("toks"),
+          XXH64.hashLong(1L, 42L)).as("fp_hi"))
+      .filter(col("fp_lo").isNotNull)
 
   /** 128-bit hamming distance over the (lo, hi) fingerprint pair. */
   def hammingWide(aLo: Column, aHi: Column,
@@ -586,8 +564,10 @@ object Dedup {
     * the same 64-bit fingerprint: split into 8 blocks of 8 bits; ≤ 3
     * errors corrupt ≤ 3 blocks, so ≥ 5 blocks survive intact and the
     * C(8,5) = 56-table index keyed on each 5-block combination (a
-    * 40-bit key) finds every qualifying pair. Candidates are 56
-    * explode rows per doc (vs 4) but random key collisions are
+    * 40-bit key) finds every qualifying pair. The 56 keys come from one
+    * codegen'd [[graft.functions.SimHashBlockKeys]] call per doc,
+    * posexploded into (tbl, key) rows. Candidates are 56 rows per doc
+    * (vs 4) but random key collisions are
     * ~56·n²/2^41 — negligible into the trillions of documents, where
     * the 4×16-bit scheme's 4·n²/2^17 goes quadratic (measured: 2.39B
     * candidate pairs at 500k docs). Same exact-popcount verification;
@@ -597,19 +577,10 @@ object Dedup {
                           maxHamming: Int): DataFrame = {
     require(maxHamming <= 3, "8-block/5-intact scheme guarantees <= 3")
     val fps = simhashTable(df, textCol, idCol).cache()
-    val combos = (0 until 8).combinations(5).toSeq // 56, deterministic
-    val tables = combos.zipWithIndex.map { case (blocks, t) =>
-      val key = blocks.zipWithIndex.map { case (b, pos) =>
-        shiftleft(shiftright(col("fp"), b * 8).bitwiseAND(lit(255L)),
-          pos * 8)
-      }.reduce((a, c) => a.bitwiseOR(c))
-      struct(lit(t).as("tbl"), key.as("key"))
-    }
     val banded = fps.select(
-      explode(array(tables: _*)).as("bk"),
+      posexplode(graft.functions.Native.simhashBlockKeys(col("fp")))
+        .as(Seq("tbl", "key")),
       struct(col("doc_id"), col("fp")).as("m"))
-      .select(col("bk.tbl").as("tbl"), col("bk.key").as("key"),
-        col("m"))
     intraBucketPairs(banded, Seq("tbl", "key"), col("m"), "doc_id")
       .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
         col("a.fp").as("fp_a"), col("b.fp").as("fp_b"))

@@ -152,16 +152,9 @@ object SlopeProbe {
       // over (tbl, key) groups, same analytic treatment. Expected
       // ∝ true near-dup pairs (+ ~56·n²/2^41 random floor), NOT
       // 4·n²/2^16.
-      val combos = (0 until 8).combinations(5).toSeq
-      val bB = fp64.select(explode(array(combos.zipWithIndex.map {
-          case (blocks, tn) =>
-            val key = blocks.zipWithIndex.map { case (blk, pos) =>
-              shiftleft(shiftright(col("fp"), blk * 8)
-                .bitwiseAND(lit(255L)), pos * 8)
-            }.reduce((x, y) => x.bitwiseOR(y))
-            struct(lit(tn).as("band"), key.as("key"))
-        }: _*)).as("bk"))
-        .select(col("bk.band").as("band"), col("bk.key").as("key"))
+      val bB = fp64.select(
+        posexplode(graft.functions.Native.simhashBlockKeys(col("fp")))
+          .as(Seq("band", "key")))
       val pB = pairSpace(bB)
       if (spacesOnly) {
         SweepLog.append("simhash",
