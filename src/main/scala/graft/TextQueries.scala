@@ -30,24 +30,22 @@ object TextQueries {
     * hamming <= 3), exact hamming verification on band collisions.
     * All-integer output — nothing to round cross-engine. The Spark
     * side keeps the production shape: `bits` codegen'd vote sums,
-    * map-side combined, ONE shuffle on doc_id, then the banded
-    * self-join (merge-hinted — the bucket-key join the production
-    * xxhash64 forms use).
+    * map-side combined, ONE shuffle on doc_id, then the production
+    * band keys and verification tail (`Dedup.simhashBandKeys` /
+    * `simhashWideBandKeys` + `simhashVerified`).
     *
-    * The fingerprint is BIT-PACKED into 32-bit words and hamming is
-    * `bit_count(xor(...))` per word (r17): the original ARRAY<INT>
-    * fingerprint's hamming — `aggregate(zip_with(...))` — is a
-    * non-codegen higher-order expression that Catalyst pushes into the
-    * band self-join's SMJ predicate, so it ran INTERPRETED once per
-    * candidate pair; at gen-sf10's planted duplicate clusters (one
-    * fingerprint shared by thousands of docs → quadratic pairs inside
-    * one band bucket = one join key, unsplittable by AQE) two such
+    * The fingerprint is BIT-PACKED and hamming is `bit_count(xor(...))`
+    * per packed word (r17): the original ARRAY<INT> fingerprint's
+    * hamming — `aggregate(zip_with(...))` — is a non-codegen
+    * higher-order expression that Catalyst pushed into the then band
+    * self-join's SMJ predicate, so it ran INTERPRETED once per
+    * candidate pair; at gen-sf10's planted duplicate clusters two such
     * tasks ground for ~28 min each (jstack: ArrayAggregate.eval inside
-    * SortMergeJoinEvaluator). Packed, the same pushed-down predicate
-    * is 2 (resp. 4) codegen'd xor+popcounts — ~100× cheaper per pair,
-    * identical output (bit b of the fingerprint is unchanged; bands
-    * still partition the bits, so the hamming<=3 pigeonhole is
-    * unchanged). Words are 32-bit so no sign games in either engine.
+    * SortMergeJoinEvaluator). Packed, it is 1–4 codegen'd
+    * xor+popcounts per pair, identical output (bands still partition
+    * the bits, so the hamming<=3 pigeonhole is unchanged). The SQL side
+    * packs 32-bit words so DuckDB needs no sign games; the Spark side
+    * packs the same bits into 64-bit lanes (two words each).
     */
   private def simhashMd5Spec(name: String, bits: Int): QuerySpec = {
     val words = bits / 32 // 2 (64-bit twin) or 4 (wide twin)
@@ -116,35 +114,20 @@ object TextQueries {
       }
       val tallies = toked.groupBy("doc_id")
         .agg(votes.head, votes.tail: _*)
-      val packed = (0 until words).map { w =>
-        (0 until 32).map { j =>
-          when(col(s"v${w * 32 + j}") > 0, lit(1L << j)).otherwise(0L)
-        }.reduce(_ bitwiseOR _).as(s"w$w")
+      // 64-bit lanes (bit j of lane l = fingerprint bit 64l + j): the
+      // SQL side's 32-bit words, two per lane, so the production band
+      // keys reproduce its keys exactly.
+      val lanes = (0 until bits / 64).map { l =>
+        (0 until 64).map { j =>
+          when(col(s"v${l * 64 + j}") > 0, lit(1L << j)).otherwise(0L)
+        }.reduce(_ bitwiseOR _).as(s"fp$l")
       }
-      val fps = tallies.select(col("doc_id") +: packed: _*).persist()
-      def bandKey(b: Int): org.apache.spark.sql.Column =
-        if (bits == 64)
-          shiftright(col(s"w${b / 2}"), (b % 2) * 16)
-            .bitwiseAND(lit(65535L))
-        else col(s"w$b")
-      val banded = fps.select(
-        posexplode(array((0 until 4).map(bandKey): _*))
-          .as(Seq("bd", "key")),
-        struct(col("doc_id") +:
-          (0 until words).map(w => col(s"w$w")): _*).as("m"))
-      val cand = Dedup.intraBucketPairs(banded, Seq("bd", "key"),
-          col("m"), "doc_id")
-        .select(
-          col("a.doc_id").as("doc_a") +: col("b.doc_id").as("doc_b") +:
-            ((0 until words).map(w => col(s"a.w$w").as(s"a$w")) ++
-              (0 until words).map(w => col(s"b.w$w").as(s"b$w"))): _*)
-        .distinct()
-      cand.withColumn("hamming",
-          (0 until words).map(w =>
-            bit_count(col(s"a$w").bitwiseXOR(col(s"b$w"))))
-            .reduce(_ + _).cast(LongType))
-        .filter(col("hamming") <= 3)
-        .select(col("doc_a"), col("doc_b"), col("hamming"))
+      val fps = tallies.select(col("doc_id") +: lanes: _*).persist()
+      val keys =
+        if (bits == 64) Dedup.simhashBandKeys(col("fp0"))
+        else Dedup.simhashWideBandKeys(col("fp0"), col("fp1"))
+      Dedup.simhashVerified(fps, lanes.indices.map(l => s"fp$l"), keys, 3)
+        .withColumn("hamming", col("hamming").cast(LongType))
         .orderBy("doc_a", "doc_b")
     }
   }
@@ -657,11 +640,11 @@ object TextQueries {
           array_repeat(lit("~"), k),
           (acc, x) => zip_with(acc, x, (a, b) => least(a, b))).as("sig"))
         .persist()
-      // Estimator FUSED into the band join (r20, mirroring the
+      // Estimator FUSED into the banding (r20, mirroring the
       // production two-stage shape of Dedup.minhashCandidatesEst):
       // the banded table carries the k-md5 signature (n·bands rows,
       // ~0.5 KB payload each — linear in the corpus), `matches` is
-      // computed inline on the join output, and sub-threshold
+      // computed inline on the band pairs, and sub-threshold
       // candidates are dropped BEFORE the distinct shuffle. The prior
       // shape distinct'd the raw candidate stream and then attached
       // two signature arrays to every candidate via joins — at
@@ -672,13 +655,9 @@ object TextQueries {
       // admits exactly the same (doc_a, doc_b) set — both oracles
       // (the one-shot SQL here and compare_sliced.oracle_minhash_md5)
       // are unchanged.
-      val banded = sigs.select(
-        posexplode(transform(sequence(lit(0), lit(bands - 1)), b =>
-          concat_ws("", slice(col("sig"), b * r + 1, lit(r)))))
-          .as(Seq("b", "bucket")),
-        struct(col("doc_id"), col("sig")).as("m"))
-      Dedup.intraBucketPairs(banded, Seq("b", "bucket"), col("m"),
-          "doc_id")
+      val keys = transform(sequence(lit(0), lit(bands - 1)), b =>
+        concat_ws("", slice(col("sig"), b * r + 1, lit(r))))
+      Dedup.bandPairs(sigs, keys, Seq(col("sig")), "doc_id")
         .withColumn("matches",
           aggregate(zip_with(col("a.sig"), col("b.sig"),
             (p, q2) => when(p === q2, 1L).otherwise(0L)),
@@ -1248,8 +1227,9 @@ object TextQueries {
         |JOIN uc y ON bc.w2 = y.w
         |WHERE bc.c_xy >= 5
         |ORDER BY bc.w1, bc.w2""".stripMargin) { (s, dir) =>
-      // NOT spread: the A/B (Scratch exp 8, 5 pairs) read the spread
-      // form slower on every pair (median 1.05 → 1.32 s) — the added
+      // NOT spread: the A/B (5 pairs; sweeps/sweep_merge_hint_ab.jsonl
+      // `r21_second_pass_text_restructures`) read the spread
+      // form slower on every pair (median 1.05 → 1.36 s) — the added
       // exchange + wider uc cache cost more than the parallelized
       // emission saves on this join-heavy shape.
       val toked = Q.t(s, dir, "documents")
@@ -1446,7 +1426,8 @@ object TextQueries {
         |    AS mean_ppm
         |FROM q GROUP BY doc_id ORDER BY doc_id""".stripMargin) {
       (s, dir) =>
-        // NOT spread: A/B (Scratch exp 8) read plain vs spread as a
+        // NOT spread: A/B (sweeps/sweep_merge_hint_ab.jsonl
+        // `r21_second_pass_text_restructures`) read plain vs spread as a
         // tie on every calm pair — the downstream joins re-exchange bg
         // anyway, so the emission parallelism buys nothing here.
         val toked = Q.t(s, dir, "documents")

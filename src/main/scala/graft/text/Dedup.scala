@@ -11,33 +11,37 @@ import graft.Hints.MergeHintOps
 /** Near-duplicate detection: exact, n-gram Jaccard, MinHash+LSH, SimHash.
   *
   * Scale design (100 TB): nothing here ever materializes the n² pair
-  * space. Candidate pairs come from equality joins on discrete keys
-  * (shingle postings, MinHash band buckets, SimHash bands) — each is a
-  * plain shuffle-on-key join Catalyst/AQE handles, with skew bounded by
-  * dropping ultra-common postings (`maxDf`). Verification re-joins the
-  * per-doc shingle sets only for the surviving candidates.
+  * space. Candidate pairs come from discrete keys (shingle postings,
+  * MinHash/SimHash band keys): [[intraBucketPairs]] pairs the docs
+  * sharing a key (one exchange, no join), with skew bounded by dropping
+  * ultra-common postings (`maxDf`). Every banding scheme is a per-row
+  * key-array function defined here ([[minhashBandKeys]],
+  * [[simhashBandKeys]], [[simhashWideBandKeys]]; `Native.simhashBlockKeys`)
+  * fed to the one helper [[bandPairs]]. Verification touches only the
+  * candidates.
   *
   * Caching contract: the pair builders (`minhashPairs`, `simhashPairs`,
   * `simhashPairsBlocked`, `simhashPairsWide`) `cache()` their
-  * fingerprint/shingle intermediates — the self-join reads each twice —
-  * and do NOT unpersist them (the returned DataFrame is lazy; the
-  * intermediate must outlive this call). Callers running many pipelines
-  * in one session (e.g. SlopeProbe) should `spark.catalog.clearCache()`
+  * fingerprint/shingle intermediates and do NOT unpersist them (the
+  * returned DataFrame is lazy; the intermediate must outlive this
+  * call). `minhashPairs` reads its shingle sets twice (signatures and
+  * the verification attach); the SimHash fingerprint tables are read
+  * once per execution since the band self-joins went (r21), so their
+  * cache only saves re-fingerprinting when the returned DataFrame is
+  * executed more than once. Callers running many pipelines in one
+  * session (e.g. SlopeProbe) should `spark.catalog.clearCache()`
   * between them.
   *
-  * Join strategy: every remaining corpus×corpus JOIN here (posting
-  * intersections, verification attaches) carries an explicit
-  * `hint("merge")`. The band/posting sides are Generate (explode)
-  * outputs whose size estimate passes through the un-exploded child, so
-  * Catalyst auto-broadcasts them — silently at small scale, fatally at
-  * corpus scale (the gen-sf30 sweep caught the 56-way blocked-SimHash
-  * band table failing the 8 GiB broadcast limit; at gen-sf10 the same
-  * plan had silently broadcast 2.8 GB). SMJ is the plan correct stats
-  * would produce; AQE still applies skew-split and partition coalescing
-  * to the shuffles. The band-bucket SELF-joins are gone since r21:
-  * candidate pairs come from [[intraBucketPairs]] (one exchange, no
-  * sort, no broadcast hazard) instead of joining the banded table with
-  * itself.
+  * Join strategy: the corpus×corpus JOINs left here are the MinHash
+  * verification attaches ([[verifyJaccard]]) and the probe × corpus
+  * posting join of [[crossOverlapPairs]]; each carries an explicit
+  * `hint("merge")`. Their sides derive from Generate (explode) outputs
+  * whose size estimate passes through the un-exploded child, so
+  * Catalyst would auto-broadcast them — silently at small scale,
+  * fatally at corpus scale (the gen-sf30 sweep caught the 56-way
+  * blocked-SimHash band table, then a join side, failing the 8 GiB
+  * broadcast limit). SMJ is the plan correct stats would produce; AQE
+  * still applies skew-split and partition coalescing to the shuffles.
   */
 object Dedup {
 
@@ -298,7 +302,8 @@ object Dedup {
     *
     * NOT spread: an explicit `repartition(parts, bucketCols)` replacing
     * the groupBy's AQE-coalescible exchange was A/B'd (r21 third pass,
-    * Scratch experiment 10, interleaved same-JVM, calibrated pairs)
+    * interleaved same-JVM, calibrated pairs; sweeps/
+    * sweep_merge_hint_ab.jsonl `r21_third_pass_bucket_spread_rejected`)
     * and REJECTED — calm-window pairs at sf0.1 read plain ~0.71 s vs
     * spread ~0.92 s medians, and ov-sf10 (500k docs) pairs tied
     * (2.07/2.02, 1.70/1.67). The Debug reading that motivated it (a
@@ -323,67 +328,82 @@ object Dedup {
       .filter(col("a")(idField) < col("b")(idField))
   }
 
-  /** LSH banding: split the k-wide signature into `bands` bands of
-    * k/bands rows; bucket key = hash of the band slice. Docs colliding in
-    * any band become candidates. Probability a pair with Jaccard j
-    * collides: 1 - (1 - j^r)^b.
+  /** Banded candidate pairs: `keys` is each row's array of band keys
+    * (element i = the row's key in band i); two rows are candidates in
+    * band i when their i-th keys are equal. Posexplodes `keys` into
+    * (band, key) rows whose member struct packs `id` plus `carry`, then
+    * [[intraBucketPairs]] emits one (a, b) row per pair per shared band
+    * — a pair colliding in three bands gives three rows, so callers
+    * `distinct()` — with a.`id` < b.`id` and null or equal ids
+    * dropped. Carried columns come out as `a.<name>` / `b.<name>`.
     */
-  def minhashCandidates(sigs: DataFrame, k: Int, bands: Int): DataFrame = {
+  private[graft] def bandPairs(table: DataFrame, keys: Column,
+                               carry: Seq[Column], id: String): DataFrame =
+    intraBucketPairs(
+      table.select(posexplode(keys).as(Seq("band", "key")),
+        struct(col(id) +: carry: _*).as("m")),
+      Seq("band", "key"), col("m"), id)
+
+  /** MinHash LSH band keys: the k-wide signature split into `bands`
+    * slices of r = k/bands rows, key i = `xxhash64(i, slice_i)`. A pair
+    * with Jaccard j shares at least one key with probability
+    * 1 − (1 − j^r)^bands.
+    */
+  def minhashBandKeys(sig: Column, k: Int, bands: Int): Column = {
     val r = k / bands
     require(bands * r == k, s"bands=$bands must divide k=$k")
-    val banded = sigs.select(
-      posexplode(transform(sequence(lit(0), lit(bands - 1)),
-        b => xxhash64(b, slice(col("sig"), b * r + 1, lit(r)))))
-        .as(Seq("band", "bucket")),
-      struct(col("doc_id")).as("m"))
-    intraBucketPairs(banded, Seq("band", "bucket"), col("m"), "doc_id")
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-      .distinct()
+    transform(sequence(lit(0), lit(bands - 1)),
+      b => xxhash64(b, slice(sig, b * r + 1, lit(r))))
   }
 
+  /** LSH banding over [[minhashBandKeys]]: docs colliding in any band
+    * become candidates (doc_a, doc_b), doc_a < doc_b.
+    */
+  def minhashCandidates(sigs: DataFrame, k: Int, bands: Int): DataFrame =
+    bandedMinhash(sigs, k, bands, None)
+
   /** LSH banding with the signature-estimate PREFILTER fused into the
-    * band join — stage one of two-stage verification. The banded rows
+    * band pairs — stage one of two-stage verification. The banded rows
     * carry a BYTE-PACKED signature ([[graft.functions.SigPack]]: each
     * value's low byte, k/8 longs — 32 B at k=32 instead of 256 B), so
     * the estimated agreement count (byte-agreements, a one-sided proxy
     * for the Broder '97 estimator: value equality implies byte
     * equality, false byte matches at P = 1/256 per disagreeing
-    * position) is computed inline on the join output and candidates
+    * position) is computed inline on the band pairs and candidates
     * below `minAgree` agreements are dropped BEFORE the distinct
     * shuffle and the shingle-array attach joins. The packed payload
-    * rides only the banded table's sort — n·bands rows — never the
-    * candidate stream, and the join output is pipeline-fused
-    * (SMJ → sig_agree_bytes → filter) so pruned candidates never touch
-    * disk. Because the proxy errs only toward keeping candidates, the
-    * recall of any threshold is ≥ the full-signature gate's; survivors
-    * inflate by ≤ E[Binom(k − agree, 1/256)] ≈ 0.1 expected false
-    * agreements per pair at k=32. k not divisible by 8 falls back to
-    * the full-signature gate.
+    * rides only the banded table's shuffle — n·bands rows — never the
+    * candidate stream, and the pair output is pipeline-fused
+    * (pair explode → sig_agree_bytes → filter) so pruned candidates
+    * never touch disk. Because the proxy errs only toward keeping
+    * candidates, the recall of any threshold is ≥ the full-signature
+    * gate's; survivors inflate by ≤ E[Binom(k − agree, 1/256)] ≈ 0.1
+    * expected false agreements per pair at k=32. k not divisible by 8
+    * falls back to the full-signature gate.
     */
   def minhashCandidatesEst(sigs: DataFrame, k: Int, bands: Int,
-                           minAgree: Int): DataFrame = {
-    val r = k / bands
-    require(bands * r == k, s"bands=$bands must divide k=$k")
+                           minAgree: Int): DataFrame =
+    bandedMinhash(sigs, k, bands, Some(minAgree))
+
+  /** The one body of [[minhashCandidates]] (no agreement gate) and
+    * [[minhashCandidatesEst]] (gate at `minAgree`).
+    */
+  private def bandedMinhash(sigs: DataFrame, k: Int, bands: Int,
+                            minAgree: Option[Int]): DataFrame = {
+    import graft.functions.Native.{sigAgree, sigAgreeBytes, sigPack}
+    val keys = minhashBandKeys(col("sig"), k, bands)
     val packed = k % 8 == 0
-    val carry =
-      if (packed) graft.functions.Native.sigPack(col("sig")).as("sigp")
-      else col("sig").as("sigp")
-    def agree(a: Column, b: Column): Column =
-      if (packed) graft.functions.Native.sigAgreeBytes(a, b)
-      else graft.functions.Native.sigAgree(a, b)
-    val banded = sigs.select(
-      posexplode(transform(sequence(lit(0), lit(bands - 1)),
-        b => xxhash64(b, slice(col("sig"), b * r + 1, lit(r)))))
-        .as(Seq("band", "bucket")),
-      struct(col("doc_id"), carry).as("m"))
-    intraBucketPairs(banded, Seq("band", "bucket"), col("m"), "doc_id")
-      .filter(agree(col("a.sigp"), col("b.sigp")) >= minAgree)
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
+    val sigp = if (packed) sigPack(col("sig")) else col("sig")
+    val agree = if (packed) sigAgreeBytes _ else sigAgree _
+    val pairs = minAgree.fold(bandPairs(sigs, keys, Nil, "doc_id"))(m =>
+      bandPairs(sigs, keys, Seq(sigp.as("sigp")), "doc_id")
+        .filter(agree(col("a.sigp"), col("b.sigp")) >= m))
+    pairs.select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
       .distinct()
   }
 
   /** Full MinHash-LSH near-dup pipeline: shingle → sign → band → bucket
-    * join → signature-estimate prefilter → exact-Jaccard verification
+    * pairs → signature-estimate prefilter → exact-Jaccard verification
     * of the surviving candidates.
     *
     * TWO-STAGE VERIFICATION (the corpus-scale contract): the exact
@@ -471,30 +491,52 @@ object Dedup {
   /** Hamming distance between two 64-bit fingerprints. */
   def hamming(a: Column, b: Column): Column = bit_count(a.bitwiseXOR(b))
 
-  /** SimHash near-dup pairs with hamming distance <= maxHamming, via the
-    * standard 4x16-bit band trick: distance <= 3 implies at least one of
-    * the 4 bands matches exactly, so candidates come from 4 equality
-    * joins (union'd), then exact popcount verification.
+  /** The 4×16-bit band keys of a 64-bit fingerprint: key i = bits
+    * [16i, 16i + 16). Hamming distance ≤ 3 leaves at least one of the 4
+    * bands intact (pigeonhole), so some key is shared.
+    */
+  def simhashBandKeys(fp: Column): Column =
+    array((0 until 4).map(b => shiftright(fp, b * 16).bitwiseAND(65535L))
+      : _*)
+
+  /** The 4×32-bit band keys of a 128-bit (lo, hi) fingerprint: the two
+    * 32-bit halves of `lo`, then of `hi`. Same pigeonhole guarantee as
+    * [[simhashBandKeys]].
+    */
+  def simhashWideBandKeys(lo: Column, hi: Column): Column =
+    array((0 until 4).map { b =>
+      shiftright(if (b < 2) lo else hi, (b % 2) * 32)
+        .bitwiseAND(0xffffffffL)
+    }: _*)
+
+  /** The SimHash verification tail shared by every banded form: band
+    * pairs of the doc_id-keyed fingerprint table `fps` over `keys`, each
+    * pair once, hamming = Σ popcount(a.c ^ b.c) over the fingerprint
+    * columns `fpCols`, kept at ≤ `maxHamming`. Output (doc_a, doc_b,
+    * hamming), doc_a < doc_b.
+    */
+  private[graft] def simhashVerified(fps: DataFrame, fpCols: Seq[String],
+                                     keys: Column,
+                                     maxHamming: Int): DataFrame =
+    bandPairs(fps, keys, fpCols.map(col), "doc_id")
+      .select(col("a.doc_id").as("doc_a") +: col("b.doc_id").as("doc_b") +:
+        fpCols.flatMap(c =>
+          Seq(col(s"a.$c").as(s"${c}_a"), col(s"b.$c").as(s"${c}_b"))): _*)
+      .distinct()
+      .withColumn("hamming", fpCols.map(c =>
+        hamming(col(s"${c}_a"), col(s"${c}_b"))).reduce(_ + _))
+      .filter(col("hamming") <= maxHamming)
+      .select("doc_a", "doc_b", "hamming")
+
+  /** SimHash near-dup pairs with hamming distance <= maxHamming over the
+    * 4×16-bit bands of [[simhashBandKeys]], then exact popcount
+    * verification.
     */
   def simhashPairs(df: DataFrame, textCol: String, idCol: String,
                    maxHamming: Int): DataFrame = {
     require(maxHamming <= 3, "4-band scheme guarantees recall only to 3")
     val fps = simhashTable(df, textCol, idCol).cache()
-    val banded = fps.select(
-      explode(array((0 until 4).map(b => struct(
-        lit(b).as("band"),
-        shiftright(col("fp"), b * 16).bitwiseAND(65535L).as("key"))): _*))
-        .as("bk"),
-      struct(col("doc_id"), col("fp")).as("m"))
-      .select(col("bk.band").as("band"), col("bk.key").as("key"),
-        col("m"))
-    intraBucketPairs(banded, Seq("band", "key"), col("m"), "doc_id")
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
-        col("a.fp").as("fp_a"), col("b.fp").as("fp_b"))
-      .distinct()
-      .withColumn("hamming", hamming(col("fp_a"), col("fp_b")))
-      .filter(col("hamming") <= maxHamming)
-      .select("doc_a", "doc_b", "hamming")
+    simhashVerified(fps, Seq("fp"), simhashBandKeys(col("fp")), maxHamming)
   }
 
   /** 128-bit SimHash fingerprint — the WIDE form that keeps banded
@@ -526,36 +568,19 @@ object Dedup {
   /** 128-bit hamming distance over the (lo, hi) fingerprint pair. */
   def hammingWide(aLo: Column, aHi: Column,
                   bLo: Column, bHi: Column): Column =
-    bit_count(aLo.bitwiseXOR(bLo)) + bit_count(aHi.bitwiseXOR(bHi))
+    hamming(aLo, bLo) + hamming(aHi, bHi)
 
-  /** SimHash near-dup pairs over the 128-bit fingerprint: 4×32-bit
-    * bands (2 from fp_lo, 2 from fp_hi), distance ≤ 3 ⇒ one band exact
-    * — identical structure to [[simhashPairs]], collision floor 2^-32
+  /** SimHash near-dup pairs over the 128-bit fingerprint: the 4×32-bit
+    * bands of [[simhashWideBandKeys]], distance ≤ 3 ⇒ one band exact —
+    * identical structure to [[simhashPairs]], collision floor 2^-32
     * per band instead of 2^-16. The corpus-scale form.
     */
   def simhashPairsWide(df: DataFrame, textCol: String, idCol: String,
                        maxHamming: Int): DataFrame = {
     require(maxHamming <= 3, "4-band scheme guarantees recall only to 3")
     val fps = simhashWideTable(df, textCol, idCol).cache()
-    val mask32 = lit(0xffffffffL)
-    val banded = fps.select(
-      explode(array((0 until 4).map { b =>
-        val src = if (b < 2) col("fp_lo") else col("fp_hi")
-        struct(lit(b).as("band"),
-          shiftright(src, (b % 2) * 32).bitwiseAND(mask32).as("key"))
-      }: _*)).as("bk"),
-      struct(col("doc_id"), col("fp_lo"), col("fp_hi")).as("m"))
-      .select(col("bk.band").as("band"), col("bk.key").as("key"),
-        col("m"))
-    intraBucketPairs(banded, Seq("band", "key"), col("m"), "doc_id")
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
-        col("a.fp_lo").as("alo"), col("a.fp_hi").as("ahi"),
-        col("b.fp_lo").as("blo"), col("b.fp_hi").as("bhi"))
-      .distinct()
-      .withColumn("hamming",
-        hammingWide(col("alo"), col("ahi"), col("blo"), col("bhi")))
-      .filter(col("hamming") <= maxHamming)
-      .select("doc_a", "doc_b", "hamming")
+    simhashVerified(fps, Seq("fp_lo", "fp_hi"),
+      simhashWideBandKeys(col("fp_lo"), col("fp_hi")), maxHamming)
   }
 
   /** SimHash near-dup pairs with OUTPUT IDENTICAL to [[simhashPairs]]
@@ -565,8 +590,8 @@ object Dedup {
     * errors corrupt ≤ 3 blocks, so ≥ 5 blocks survive intact and the
     * C(8,5) = 56-table index keyed on each 5-block combination (a
     * 40-bit key) finds every qualifying pair. The 56 keys come from one
-    * codegen'd [[graft.functions.SimHashBlockKeys]] call per doc,
-    * posexploded into (tbl, key) rows. Candidates are 56 rows per doc
+    * codegen'd [[graft.functions.SimHashBlockKeys]] call per doc, banded
+    * by [[bandPairs]] like the other forms. Candidates are 56 rows per doc
     * (vs 4) but random key collisions are
     * ~56·n²/2^41 — negligible into the trillions of documents, where
     * the 4×16-bit scheme's 4·n²/2^17 goes quadratic (measured: 2.39B
@@ -577,16 +602,7 @@ object Dedup {
                           maxHamming: Int): DataFrame = {
     require(maxHamming <= 3, "8-block/5-intact scheme guarantees <= 3")
     val fps = simhashTable(df, textCol, idCol).cache()
-    val banded = fps.select(
-      posexplode(graft.functions.Native.simhashBlockKeys(col("fp")))
-        .as(Seq("tbl", "key")),
-      struct(col("doc_id"), col("fp")).as("m"))
-    intraBucketPairs(banded, Seq("tbl", "key"), col("m"), "doc_id")
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
-        col("a.fp").as("fp_a"), col("b.fp").as("fp_b"))
-      .distinct()
-      .withColumn("hamming", hamming(col("fp_a"), col("fp_b")))
-      .filter(col("hamming") <= maxHamming)
-      .select("doc_a", "doc_b", "hamming")
+    simhashVerified(fps, Seq("fp"),
+      graft.functions.Native.simhashBlockKeys(col("fp")), maxHamming)
   }
 }

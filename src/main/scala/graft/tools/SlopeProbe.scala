@@ -80,8 +80,7 @@ object SlopeProbe {
       val sigs = hashed.select(col("doc_id"),
         graft.text.Dedup.minhashSignature(col("hs"), 32).as("sig"))
       val banded = sigs.select(col("doc_id"),
-        posexplode(transform(sequence(lit(0), lit(7)),
-          b => xxhash64(b, slice(col("sig"), b * 4 + 1, lit(4)))))
+        posexplode(graft.text.Dedup.minhashBandKeys(col("sig"), 32, 8))
           .as(Seq("band", "bucket")))
       val space = banded.groupBy("band", "bucket")
         .agg(count(lit(1)).as("c"))
@@ -127,35 +126,26 @@ object SlopeProbe {
       val spacesOnly = args.contains("--spaces-only")
       val noNarrow = args.contains("--no-narrow")
       val docs = graft.io.Tables.table(spark, sfDir, "documents")
-      def pairSpace(banded: org.apache.spark.sql.DataFrame): Long =
-        banded.groupBy("band", "key").agg(count(lit(1)).as("c"))
+      def pairSpace(fps: org.apache.spark.sql.DataFrame,
+                    keys: org.apache.spark.sql.Column): Long =
+        fps.select(posexplode(keys).as(Seq("band", "key")))
+          .groupBy("band", "key").agg(count(lit(1)).as("c"))
           .agg(coalesce(sum(col("c") * (col("c") - 1) / 2), lit(0L))
             .cast("long")).head().getLong(0)
       val fp64 = graft.text.Dedup.simhashTable(docs, "text", "doc_id")
         .persist()
       val n = fp64.count()
-      val b64 = fp64.select(explode(array((0 until 4).map(b => struct(
-          lit(b).as("band"), shiftright(col("fp"), b * 16)
-            .bitwiseAND(lit(65535L)).as("key"))): _*)).as("bk"))
-        .select(col("bk.band").as("band"), col("bk.key").as("key"))
-      val p64 = pairSpace(b64)
+      val p64 = pairSpace(fp64, graft.text.Dedup.simhashBandKeys(col("fp")))
       val fpW = graft.text.Dedup.simhashWideTable(docs, "text", "doc_id")
-      val bW = fpW.select(explode(array((0 until 4).map { b =>
-          val src = if (b < 2) col("fp_lo") else col("fp_hi")
-          struct(lit(b).as("band"), shiftright(src, (b % 2) * 32)
-            .bitwiseAND(lit(0xffffffffL)).as("key"))
-        }: _*)).as("bk"))
-        .select(col("bk.band").as("band"), col("bk.key").as("key"))
-      val pW = pairSpace(bW)
+      val pW = pairSpace(fpW,
+        graft.text.Dedup.simhashWideBandKeys(col("fp_lo"), col("fp_hi")))
       // Candidate space of the blocked (Manku 56-table, 40-bit-key)
       // scheme — the REGISTERED q_dedup_simhash plan: Σ C(count,2)
-      // over (tbl, key) groups, same analytic treatment. Expected
+      // over (band, key) groups, same analytic treatment. Expected
       // ∝ true near-dup pairs (+ ~56·n²/2^41 random floor), NOT
       // 4·n²/2^16.
-      val bB = fp64.select(
-        posexplode(graft.functions.Native.simhashBlockKeys(col("fp")))
-          .as(Seq("band", "key")))
-      val pB = pairSpace(bB)
+      val pB = pairSpace(fp64,
+        graft.functions.Native.simhashBlockKeys(col("fp")))
       if (spacesOnly) {
         SweepLog.append("simhash",
           s"""{"sf":"$sfDir","mode":"simhash","n_docs":$n,""" +

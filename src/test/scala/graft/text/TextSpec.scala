@@ -224,6 +224,45 @@ class TextSpec extends SparkSpec {
     assert(pairs == brute)
   }
 
+  test("64-bit simhash: recall exact vs the brute-force hamming <= 3 " +
+    "self-join on real documents") {
+    val pairs = Dedup.simhashPairs(docs, "text", "doc_id", 3)
+      .select("doc_a", "doc_b", "hamming")
+      .as[(Long, Long, Long)].collect().toSet
+    val fps = Dedup.simhashTable(docs, "text", "doc_id")
+    val a = fps.select($"doc_id".as("ida"), $"fp".as("fa"))
+    val b = fps.select($"doc_id".as("idb"), $"fp".as("fb"))
+    val brute = a.join(b, $"ida" < $"idb")
+      .withColumn("d", Dedup.hamming($"fa", $"fb"))
+      .filter($"d" <= 3)
+      .select($"ida", $"idb", $"d".cast("long"))
+      .as[(Long, Long, Long)].collect().toSet
+    // the planted near-dups make this non-vacuous
+    assert(brute.nonEmpty)
+    assert(pairs == brute)
+  }
+
+  test("bandPairs: one row per shared band, ids oriented a < b, null " +
+    "and equal ids dropped, carried columns under a.* / b.*") {
+    val table = Seq(
+      (Some(1L), Seq(10L, 20L, 30L, 40L), "x"),
+      (Some(2L), Seq(10L, 20L, 30L, 99L), "y"), // shares bands 0-2 with 1
+      (None, Seq(10L, 20L, 30L, 40L), "n"),     // null id: shares all
+      (Some(3L), Seq(11L, 21L, 31L, 41L), "p"),
+      (Some(3L), Seq(11L, 21L, 31L, 41L), "q"), // equal id
+      (Some(5L), Seq(50L, 60L, 70L, 80L), "s"),
+      (Some(4L), Seq(51L, 61L, 71L, 80L), "r"), // shares band 3 with 5
+      (Some(6L), Seq(80L, 600L, 601L, 602L), "t")) // 80 in band 0 only
+      .toDF("id", "keys", "tag")
+    val out = Dedup.bandPairs(table, $"keys", Seq($"tag"), "id")
+      .select($"a.id", $"b.id", $"a.tag", $"b.tag")
+      .as[(Long, Long, String, String)]
+    assert(out.collect().toSeq.sorted == Seq((1L, 2L, "x", "y"),
+      (1L, 2L, "x", "y"), (1L, 2L, "x", "y"), (4L, 5L, "r", "s")))
+    assert(out.distinct().collect().toSet ==
+      Set((1L, 2L, "x", "y"), (4L, 5L, "r", "s")))
+  }
+
   test("blocked simhash (8x8-bit, C(8,5) tables) reproduces the " +
     "4x16-band pair set bit-for-bit on real documents") {
     val docs = graft.io.Tables.table(spark, "/root/testdata/sf0.001",
@@ -249,22 +288,16 @@ class TextSpec extends SparkSpec {
       (i.toLong, (0 until 12).map(j => s"w${(i * 131 + j * 7919) % 100000}")
         .mkString(" "))
     }.toDF("doc_id", "text")
-    def candidates(banded: org.apache.spark.sql.DataFrame): Long =
-      banded.groupBy("band", "key").count()
+    def candidates(fps: org.apache.spark.sql.DataFrame,
+                   keys: org.apache.spark.sql.Column): Long =
+      fps.select(posexplode(keys).as(Seq("band", "key")))
+        .groupBy("band", "key").count()
         .agg(coalesce(sum($"count" * ($"count" - 1) / 2), lit(0L))
           .cast("long")).head().getLong(0)
-    val n64 = candidates(Dedup.simhashTable(docs, "text", "doc_id")
-      .select(explode(array((0 until 4).map(k => struct(
-        lit(k).as("band"), shiftright($"fp", k * 16)
-          .bitwiseAND(lit(65535L)).as("key"))): _*)).as("bk"))
-      .select($"bk.band".as("band"), $"bk.key".as("key")))
-    val nW = candidates(Dedup.simhashWideTable(docs, "text", "doc_id")
-      .select(explode(array((0 until 4).map { k =>
-        val src = if (k < 2) $"fp_lo" else $"fp_hi"
-        struct(lit(k).as("band"), shiftright(src, (k % 2) * 32)
-          .bitwiseAND(lit(0xffffffffL)).as("key"))
-      }: _*)).as("bk"))
-      .select($"bk.band".as("band"), $"bk.key".as("key")))
+    val n64 = candidates(Dedup.simhashTable(docs, "text", "doc_id"),
+      Dedup.simhashBandKeys($"fp"))
+    val nW = candidates(Dedup.simhashWideTable(docs, "text", "doc_id"),
+      Dedup.simhashWideBandKeys($"fp_lo", $"fp_hi"))
     // the wide form must eliminate (essentially all of) the random
     // collisions the 16-bit bands admit
     assert(nW < n64, s"wide=$nW narrow=$n64")
