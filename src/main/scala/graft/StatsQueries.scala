@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Q._
@@ -21,6 +22,22 @@ object StatsQueries {
     "(q_graph_degree/q_graph_triangles consume this projection; " +
       "SPARK_GRAFT_COOC_PAIR_CAP raises their cap — the gen-sf30 " +
       "sweep priced this stream at 2.7B rows / ~60GB transient.)"
+
+  /** The strong-tie customer–supplier co-supply projection both graph
+    * queries consume: guarded, then parquet-memoized on the built edges
+    * (so the guard's cap is still compared on every call).
+    */
+  private def cosupply(s: SparkSession, dir: String): DataFrame = {
+    val cs = t(s, dir, "orders")
+      .join(t(s, dir, "lineitem"), col("o_orderkey") === col("l_orderkey"))
+      .select(col("o_custkey"), col("l_suppkey"))
+    val e = graft.ops.Graph.coOccurrenceEdgesGuarded(cs, "o_custkey",
+      "l_suppkey", meanFactor = 1.08, maxDeg = 500L,
+      maxPairs = graft.ops.Caps
+        .longEnv("SPARK_GRAFT_COOC_PAIR_CAP", 200000000L),
+      hint = cooccurHint)
+    graft.ops.Memo.parquet(graft.ops.Memo.key(Seq(e), "cosupply"))(e)
+  }
 
   def specs: Seq[QuerySpec] = Seq(
 
@@ -519,17 +536,7 @@ object StatsQueries {
         |SELECT (SELECT count(*) FROM e) AS n_edges,
         |       nw.n_wedges, tri.n_triangles
         |FROM tri, nw""".stripMargin) { (s, dir) =>
-      val cs = t(s, dir, "orders")
-        .join(t(s, dir, "lineitem"),
-          col("o_orderkey") === col("l_orderkey"))
-        .select(col("o_custkey"), col("l_suppkey"))
-      graft.ops.Graph.triangleStats(
-        graft.ops.Materialize.parquet(
-          graft.ops.Graph.coOccurrenceEdgesGuarded(cs, "o_custkey",
-            "l_suppkey", meanFactor = 1.08, maxDeg = 500L,
-            maxPairs = graft.ops.Caps
-              .longEnv("SPARK_GRAFT_COOC_PAIR_CAP", 200000000L),
-            hint = cooccurHint), "cosupply"))
+      graft.ops.Graph.triangleStats(cosupply(s, dir))
     },
 
     // -- degree distribution of the same strong-tie projection ---------
@@ -552,16 +559,7 @@ object StatsQueries {
         |      GROUP BY 1)
         |SELECT degree, count(*) AS n_nodes FROM d
         |GROUP BY 1 ORDER BY degree""".stripMargin) { (s, dir) =>
-      val cs = t(s, dir, "orders")
-        .join(t(s, dir, "lineitem"),
-          col("o_orderkey") === col("l_orderkey"))
-        .select(col("o_custkey"), col("l_suppkey"))
-      val e = graft.ops.Materialize.parquet(
-        graft.ops.Graph.coOccurrenceEdgesGuarded(cs, "o_custkey",
-          "l_suppkey", meanFactor = 1.08, maxDeg = 500L,
-          maxPairs = graft.ops.Caps
-            .longEnv("SPARK_GRAFT_COOC_PAIR_CAP", 200000000L),
-          hint = cooccurHint), "cosupply")
+      val e = cosupply(s, dir)
       e.select(col("lo").as("node"))
         .unionAll(e.select(col("hi").as("node")))
         .groupBy("node").agg(count(lit(1)).as("degree"))

@@ -32,27 +32,17 @@ object Tables {
     * instant-preserving and matches what DuckDB reads from the same
     * parquet.
     */
-  /** Per-JVM cache of inferred parquet schemas, keyed by table path —
-    * the local stand-in for a catalog/metastore. Without it EVERY
-    * `spark.read.parquet` runs a footer-inference job (~25-35 ms of
-    * driver scheduling per table, measured in the r21 Debug profiles
-    * as sequential "parquet at Tables.scala" jobs at the head of every
-    * query invocation); with the schema supplied the reader plans
-    * straight from metadata. Within one JVM the files are immutable
-    * (testdata is read-only; generated corpora are written before they
-    * are read), so the cached schema is exactly what inference would
-    * return — including the nanosAsLong LongType surface for
-    * TIMESTAMP(NANOS) columns, because the conf is set before the
-    * first (inferring) read of each path.
-    */
-  private val schemaCache =
-    new java.util.concurrent.ConcurrentHashMap[String, StructType]()
-
   def table(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val path = s"$sfDir/$name.parquet"
-    val sch = schemaCache.computeIfAbsent(path,
-      _ => spark.read.parquet(path).schema)
+    // Schema memoized on the path's files (as a fixed-schema binaryFile
+    // relation lists them), a stand-in for a catalog: otherwise EVERY
+    // read runs a footer-inference job (~25-35 ms per table in the r21
+    // Debug profiles). A rewritten path lists other files. The conf is
+    // set before the inferring read, so nanosAsLong columns stay Long.
+    val files = spark.read.format("binaryFile").load(path)
+    val sch = graft.ops.Memo.value(graft.ops.Memo.key(Seq(files),
+      "schema", path))(spark.read.parquet(path).schema)
     val df = spark.read.schema(sch).parquet(path)
     df.schema.fields.foldLeft(df) { (d, f) =>
       if (f.dataType == LongType &&

@@ -7,6 +7,11 @@ package graft.ops
   * [[Graph.coOccurrenceEdgesGuarded]],
   * [[graft.text.Dedup.ngramJaccardPairs]]'s `maxPairs`, and
   * [[graft.text.Similarity.cosinePairsGuarded]].
+  *
+  * Each guard memoizes its ESTIMATE in [[Memo]] (warm re-pricing cost
+  * cooc 0.54 s, interval 0.91 s, ngram 0.12 s, embed 0.13 s —
+  * `sweeps/sweep_guardcost.jsonl`), never its decision: every call
+  * compares against ITS cap, so an over-cap corpus always refuses.
   */
 object Caps {
 
@@ -31,45 +36,6 @@ object Caps {
                 s"(plain digits — e.g. $default)", e)
         }
     }
-
-  /** Per-JVM memo of guard candidate-volume estimates, keyed on the
-    * canonicalized ANALYZED plan of the priced relation — the exact
-    * [[Materialize]] keying, so the staleness contract matches: a
-    * fresh corpus is a different path → a different canonical plan →
-    * a fresh estimate; only re-pricing the SAME relation in the same
-    * JVM is skipped (measured per warm invocation before memoization:
-    * cooc 0.54 s, interval 0.91 s, ngram 0.12 s, embed 0.13 s —
-    * `sweeps/sweep_guardcost.jsonl`). The memo stores the ESTIMATE,
-    * never the over/under-cap decision: every call still compares
-    * against ITS cap, so a planted over-cap corpus refuses on every
-    * invocation. In-place overwrites of the same path within one JVM
-    * would stale-hit — the same documented trade [[Materialize]]
-    * carries, acceptable because corpora here are written once.
-    */
-  private val estMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
-
-  def memoizedEstimate(keyDf: org.apache.spark.sql.DataFrame,
-                       tag: String)(compute: => Long): Long =
-    estMemo.computeIfAbsent(tag + "|" + planKey(keyDf), _ => compute)
-
-  /** Canonical-plan key. `canonicalized.toString` alone is blind to
-    * LocalRelation DATA (toString prints only the schema — two
-    * different in-memory corpora of the same shape would collide, the
-    * failure mode PairGuardSpec's over-cap-then-under-cap sequence
-    * exercises), so local rows are folded in by structural hash.
-    * File-backed relations carry their path in the plan string, which
-    * is what makes "fresh corpus ⇒ fresh estimate" hold.
-    */
-  private[graft] def planKey(df: org.apache.spark.sql.DataFrame): String = {
-    val analyzed = df.queryExecution.analyzed
-    val localData = analyzed.collect {
-      case l: org.apache.spark.sql.catalyst.plans.logical.LocalRelation =>
-        l.data.hashCode
-    }
-    analyzed.canonicalized.toString + "|local:" +
-      localData.mkString(",")
-  }
 
   /** Saturating double→long for guard estimates. Guard sums run in
     * DOUBLE so that pathological concentrations can never overflow

@@ -163,12 +163,11 @@ object Graph {
                                maxDeg: Long, maxPairs: Long,
                                hint: String = ""): DataFrame = {
     val p = prunedPairs(pairs, ctxCol, itemCol, maxDeg).persist()
-    // Memoized per canonical plan of `p` (Caps.memoizedEstimate —
-    // VERDICT r19 item 7): re-invocations of the same projection in
-    // one JVM skip the 0.5 s re-pricing pass; a different corpus is a
-    // different plan and prices fresh. The CAP comparison below still
-    // runs per call.
-    val est = Caps.memoizedEstimate(p, "cooc") {
+    // Memoized on `p` (Memo.key — VERDICT r19 item 7): re-invocations
+    // of the same projection in one JVM skip the 0.5 s re-pricing pass;
+    // a different or rewritten corpus is a different key and prices
+    // fresh. The CAP comparison below still runs per call.
+    val est = Memo.value(Memo.key(Seq(p), "cooc")) {
       Caps.saturate {
         val r = p.groupBy("c").agg(count(lit(1)).cast(DoubleType).as("d"))
           .agg(sum(col("d") * (col("d") - 1) / 2)).collect()(0)

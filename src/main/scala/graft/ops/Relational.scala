@@ -339,14 +339,11 @@ object Relational {
                           bucketSeconds: Long,
                           maxPairs: Long,
                           hint: String = ""): DataFrame = {
-    // Memoized per canonical plan of both inputs (Caps.memoizedEstimate
-    // — VERDICT r19 item 7): re-invocations of the same join in one JVM
-    // skip the ~0.9 s re-pricing pass; different inputs (or a different
-    // bucketing) price fresh. The CAP comparison below still runs per
-    // call.
-    val est = Caps.memoizedEstimate(a,
-      s"interval|$aStart|$aEnd|$bStart|$bEnd|$bucketSeconds|" +
-        b.queryExecution.analyzed.canonicalized.toString) {
+    // Memoized on both inputs (Memo.key — VERDICT r19 item 7): the
+    // same join skips the ~0.9 s re-pricing pass; other rows, files or
+    // bucketing price fresh. The CAP comparison below runs per call.
+    val est = Memo.value(Memo.key(Seq(a, b), "interval", aStart, aEnd,
+        bStart, bEnd, bucketSeconds)) {
       intervalJoinPairEstimate(
         a, b, aStart, aEnd, bStart, bEnd, bucketSeconds)
     }

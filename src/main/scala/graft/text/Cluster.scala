@@ -11,9 +11,10 @@ import org.apache.spark.sql.functions._
   *
   * Scale: each iteration is one join + one aggregation on the edge
   * list (both shuffles on node id); iterations needed = graph diameter
-  * (near-dup clusters are tiny cliques, so 2-3 in practice, `maxIter`
-  * bounds the pathological chain). Driver holds only the convergence
-  * counter, never the graph.
+  * (near-dup clusters are tiny cliques, so 2-3 in practice; a chain
+  * longer than `maxIter` hops refuses instead of returning partial
+  * labels). Driver holds only the convergence counter, never the
+  * graph.
   */
 object Cluster {
 
@@ -79,10 +80,14 @@ object Cluster {
       // partition count (the session-wide shuffle.partitions knob is
       // sized for the corpus); groupBy reuses the layout, so this is
       // still exactly one exchange per iteration.
+      // localCheckpoint, not cache, cuts the lineage: a cached `next`
+      // nests the previous labels twice (union and join), so the plan
+      // and AQE's per-execution explain string double per iteration (a
+      // 25-hop chain ran the JVM out of heap near iteration 20).
       val next = labels.unionByName(candidates)
         .repartition(parts, col("id"))
         .groupBy("id").agg(min("component").as("component"))
-        .cache()
+        .localCheckpoint(eager = false)
       val newSum = next.agg(coalesce(sum("component"), lit(0L)))
         .collect()(0).getLong(0)
       labels.unpersist()
@@ -91,13 +96,19 @@ object Cluster {
       prevSum = newSum
       iter += 1
     }
+    symC.unpersist()
+    sym.unpersist()
+    if (!converged) {
+      labels.unpersist()
+      throw new IllegalStateException(
+        s"connectedComponents did not converge in maxIter=$maxIter " +
+          "iterations: a component spans more hops than that, so its " +
+          "labels would be partial. Raise maxIter.")
+    }
     val isolated = vertices.select(col("id"))
       .join(labels.select(col("id")), Seq("id"), "left_anti")
       .select(col("id"), col("id").as("component"))
-    val out = labels.unionByName(isolated)
-    symC.unpersist()
-    sym.unpersist()
-    out
+    labels.unionByName(isolated)
   }
 
   /** Dedup clustering end-to-end: near-dup pairs (exact n-gram Jaccard)
@@ -109,10 +120,9 @@ object Cluster {
     *        it dies by spill instead of refusing (measured r21: at
     *        gen-sf10 the clustering pipeline ENOSPC'd a 77 GB disk in
     *        its pair stage — the same 1.3e10-pair estimate the guarded
-    *        twin refuses at plan time). The estimate is memoized per
-    *        canonical plan and the clustering result is
-    *        parquet-memoized per process, so the bench's timed runs
-    *        never pay the pricing pass.
+    *        twin refuses at plan time). The estimate and the clustering
+    *        result are memoized on the input ([[graft.ops.Memo]]), so
+    *        the bench's timed runs never pay the pricing pass.
     */
   def dedupClusters(docs: DataFrame, textCol: String, idCol: String,
                     n: Int, minJaccard: Double,
@@ -139,41 +149,20 @@ object Cluster {
         col("is_canonical"))
   }
 
-  // Materialized clustering, keyed by (input plan, params). A dedup
-  // clustering is consumed by several downstream reports (the cluster
-  // listing, survivor selection, drop audits …) — in a production
-  // pipeline it is computed ONCE, written out, and shared, not
-  // re-derived per consumer. Parquet (not .persist) is deliberate:
-  // the fixpoint loop's result drags a deep nested-cache lineage that
-  // Spark re-plans on every reuse; writing truncates it to a plain
-  // scan of a tiny table, which is also exactly what a 100 TB pipeline
-  // does with its clustering artifact. (The INPUT plan is the key —
-  // the loop runs eager sizing/convergence jobs during construction,
-  // so [[graft.ops.Materialize]]'s output-plan keying would re-run
-  // them per consumer.)
-  private val memo = new java.util.concurrent.ConcurrentHashMap[
-    String, String]()
-
-  /** [[dedupClusters]] through a process-wide materialization cache:
-    * the first consumer computes the assignment and writes it to a
-    * temp parquet; every consumer (same input, same params) reads the
-    * written artifact.
+  /** [[dedupClusters]] through [[graft.ops.Memo.parquet]], keyed on
+    * the input plus params: the first consumer computes the assignment
+    * and writes it to a temp parquet; every consumer (same input, same
+    * params) reads the written artifact. A dedup clustering feeds
+    * several downstream reports (the cluster listing, survivor
+    * selection, drop audits …) — a production pipeline computes it
+    * ONCE and shares the table. The INPUT is the key, not the output
+    * plan: the loop runs eager sizing/convergence jobs while the output
+    * is built, so keying on it would re-run them per consumer.
     */
   def materializedClusters(docs: DataFrame, textCol: String, idCol: String,
-                           n: Int, minJaccard: Double): DataFrame = {
-    val spark = docs.sparkSession
-    val key = Seq(docs.queryExecution.analyzed.canonicalized.toString,
-      textCol, idCol, n, minJaccard).mkString("|")
-    val path = memo.computeIfAbsent(key, { _ =>
-      val dir = java.nio.file.Files
-        .createTempDirectory("graft_clusters").toString
-      // REBALANCE: compact the artifact to advisory-size files so
-      // consumer scans don't pay per-tiny-split reader setup (same
-      // small-files fix as ops.Materialize; guide §6).
+                           n: Int, minJaccard: Double): DataFrame =
+    graft.ops.Memo.parquet(graft.ops.Memo.key(Seq(docs), "clusters",
+        textCol, idCol, n, minJaccard)) {
       dedupClusters(docs, textCol, idCol, n, minJaccard)
-        .hint("rebalance").write.mode("overwrite").parquet(dir)
-      dir
-    })
-    spark.read.parquet(path)
-  }
+    }
 }

@@ -140,11 +140,11 @@ object Dedup {
     // per Caps.saturate) instead of dying by spill mid-join. The banded
     // MinHash form (minhashPairs) is the corpus-scale companion.
     if (maxPairs != Long.MaxValue) {
-      // Memoized per canonical plan of `posts` (Caps.memoizedEstimate —
-      // VERDICT r19 item 7; the plan embeds the maxDf pruning, so a
-      // different maxDf prices fresh). The CAP comparison below still
-      // runs per call.
-      val est = graft.ops.Caps.memoizedEstimate(posts, "ngram") {
+      // Memoized on `posts` (Memo.key — VERDICT r19 item 7; the plan
+      // embeds the maxDf pruning, so a different maxDf prices fresh).
+      // The CAP comparison below still runs per call.
+      val est = graft.ops.Memo.value(graft.ops.Memo.key(Seq(posts),
+          "ngram")) {
         val r = posts.groupBy("s")
           .agg(count(lit(1)).cast(DoubleType).as("d"))
           .agg(sum(col("d") * (col("d") - 1) / 2)).collect()(0)

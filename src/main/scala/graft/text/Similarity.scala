@@ -265,9 +265,8 @@ object Similarity {
     // built once and reused by every query, so it is memoized per
     // (corpus, params); rebuilding a static index per query would
     // charge the training k-means to every lookup.
-    val memoKey = Seq(corpus.queryExecution.analyzed.canonicalized
-      .toString, idCol, vecCol, nlist, seed).mkString("|")
-    val centerRows = Similarity.ivfCenters.computeIfAbsent(memoKey, { _ =>
+    val centerRows = graft.ops.Memo.value(graft.ops.Memo.key(Seq(corpus),
+        "ivf", idCol, vecCol, nlist, seed)) {
       val budget = nlist.toLong * 256L
       val total = corpus.count()
       val permille = if (total <= budget) 1000L
@@ -283,7 +282,7 @@ object Similarity {
         .fit(trainDf)
       model.clusterCenters.zipWithIndex
         .map { case (v, i) => (i.toLong, v.toArray) }.toSeq
-    })
+    }
     val centers = centerRows.toDF("cell", "cvec")
       .select(col("cell"), quantVec(col("cvec")).as("qc"))
       .withColumn("cn2", qnorm2(col("qc")))
@@ -358,12 +357,6 @@ object Similarity {
         col("rnk").cast(LongType).as("rnk"))
   }
 
-  /** Memoized IVF coarse-quantizer centroids (the trained index;
-    * nlist × dim doubles per entry — model-sized).
-    */
-  private val ivfCenters = new java.util.concurrent.ConcurrentHashMap[
-    String, Seq[(Long, Array[Double])]]()
-
   /** All embedding pairs with cosine >= minCosine (near-dup detection).
     * Exact, computed as a distributed block-nested-loop JOIN: the
     * quantized corpus is `broadcast()` as the build side of a
@@ -424,10 +417,11 @@ object Similarity {
   def cosinePairsGuarded(df: DataFrame, idCol: String, vecCol: String,
                          minCosine: Double, dim: Int, maxPairs: Long,
                          hint: String = ""): DataFrame = {
-    // Memoized per canonical plan of `df` (Caps.memoizedEstimate —
-    // VERDICT r19 item 7): the priced quantity is just the corpus
-    // count. The CAP comparison below still runs per call.
-    val n = graft.ops.Caps.memoizedEstimate(df, "cosine_n")(df.count())
+    // Memoized on `df` (Memo.key — VERDICT r19 item 7): the priced
+    // quantity is just the corpus count. The CAP comparison below
+    // still runs per call.
+    val n = graft.ops.Memo.value(graft.ops.Memo.key(Seq(df),
+      "cosine_n"))(df.count())
     val est = graft.ops.Caps.saturate(n.toDouble * (n - 1).toDouble / 2)
     if (est > maxPairs) throw new IllegalStateException(
       s"exact cosine all-pairs estimate $est (n=$n) exceeds maxPairs " +

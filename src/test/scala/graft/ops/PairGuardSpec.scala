@@ -34,20 +34,6 @@ class PairGuardSpec extends SparkSpec {
     assert(Caps.saturate(Double.NaN) == Long.MaxValue)
   }
 
-  test("Caps.memoizedEstimate: same plan skips recompute, different " +
-    "local data prices fresh") {
-    var calls = 0
-    val a = Seq((1L, 2L), (3L, 4L)).toDF("x", "y")
-    val sameAsA = Seq((1L, 2L), (3L, 4L)).toDF("x", "y")
-    val b = Seq((5L, 6L)).toDF("x", "y") // same schema, different rows
-    def price(df: org.apache.spark.sql.DataFrame): Long =
-      Caps.memoizedEstimate(df, "spec") { calls += 1; df.count() }
-    assert(price(a) == 2L && calls == 1)
-    assert(price(a) == 2L && calls == 1) // same object: memo hit
-    assert(price(sameAsA) == 2L && calls == 1) // same plan+data: memo hit
-    assert(price(b) == 1L && calls == 2) // same schema, new data: fresh
-  }
-
   // ---- n-gram posting self-join --------------------------------------
 
   private val dupDocs = (0 until 30)

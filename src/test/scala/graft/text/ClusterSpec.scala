@@ -16,6 +16,21 @@ class ClusterSpec extends SparkSpec {
       10L -> 10L, 11L -> 10L, 20L -> 20L))
   }
 
+  test("connectedComponents refuses a 25-node path at maxIter = 20 and " +
+    "labels it whole at maxIter = 30") {
+    // min-label propagation moves one hop per iteration: node 24 gets
+    // label 0 in round 24, and round 25 confirms the fixpoint
+    val vertices = (0L until 25L).toDF("id")
+    val edges = (0L until 24L).map(i => (i, i + 1)).toDF("src", "dst")
+    val e = intercept[IllegalStateException] {
+      Cluster.connectedComponents(vertices, edges, maxIter = 20)
+    }
+    assert(e.getMessage.contains("maxIter=20"))
+    val out = Cluster.connectedComponents(vertices, edges, maxIter = 30)
+      .as[(Long, Long)].collect().toMap
+    assert(out == (0L until 25L).map(_ -> 0L).toMap)
+  }
+
   test("dedupClusters marks exactly one canonical doc per component") {
     val docs = Seq(
       (1L, "alpha beta gamma delta epsilon zeta"),

@@ -199,29 +199,38 @@ class TextSpec extends SparkSpec {
 
   test("wide simhash: identical docs at distance 0; recall exact vs " +
     "brute force at hamming <= 3; no pair exceeds the bound") {
+    // exactness: banding must find EVERY pair the brute-force 128-bit
+    // hamming join finds (pigeonhole: distance <= 3 => one band equal)
+    def pairsAndBrute(df: org.apache.spark.sql.DataFrame) = {
+      val pairs = Dedup.simhashPairsWide(df, "text", "doc_id", 3)
+        .select("doc_a", "doc_b", "hamming")
+        .as[(Long, Long, Long)].collect().toSet
+      val fps = Dedup.simhashWideTable(df, "text", "doc_id")
+      val a = fps.select($"doc_id".as("ida"), $"fp_lo".as("alo"),
+        $"fp_hi".as("ahi"))
+      val b = fps.select($"doc_id".as("idb"), $"fp_lo".as("blo"),
+        $"fp_hi".as("bhi"))
+      val brute = a.join(b, $"ida" < $"idb")
+        .withColumn("d", Dedup.hammingWide($"alo", $"ahi", $"blo", $"bhi"))
+        .filter($"d" <= 3)
+        .select($"ida", $"idb", $"d".cast("long"))
+        .as[(Long, Long, Long)].collect().toSet
+      (pairs, brute)
+    }
     val df = Seq((1L, "the quick brown fox jumps over the lazy dog"),
       (2L, "the quick brown fox jumps over the lazy dog"),
       (3L, "entirely different words appear here tonight"),
       (4L, "the quick brown fox jumps over the lazy cat"))
       .toDF("doc_id", "text")
-    val pairs = Dedup.simhashPairsWide(df, "text", "doc_id", 3)
-      .select("doc_a", "doc_b", "hamming")
-      .as[(Long, Long, Long)].collect().toSet
+    val (pairs, brute) = pairsAndBrute(df)
     assert(pairs.contains((1L, 2L, 0L)))
     assert(!pairs.exists(p => p._3 > 3))
-    // exactness: banding must find EVERY pair the brute-force 128-bit
-    // hamming join finds (pigeonhole: distance <= 3 => one band equal)
-    val fps = Dedup.simhashWideTable(df, "text", "doc_id")
-    val a = fps.select($"doc_id".as("ida"), $"fp_lo".as("alo"),
-      $"fp_hi".as("ahi"))
-    val b = fps.select($"doc_id".as("idb"), $"fp_lo".as("blo"),
-      $"fp_hi".as("bhi"))
-    val brute = a.join(b, $"ida" < $"idb")
-      .withColumn("d", Dedup.hammingWide($"alo", $"ahi", $"blo", $"bhi"))
-      .filter($"d" <= 3)
-      .select($"ida", $"idb", $"d".cast("long"))
-      .as[(Long, Long, Long)].collect().toSet
     assert(pairs == brute)
+    // The real documents hold 128-bit pairs at exactly the bound, so an
+    // off-by-one in the hamming filter shows.
+    val (realPairs, realBrute) = pairsAndBrute(docs)
+    assert(realBrute.exists(_._3 == 3L))
+    assert(realPairs == realBrute)
   }
 
   test("64-bit simhash: recall exact vs the brute-force hamming <= 3 " +
