@@ -15,8 +15,8 @@ import graft.ops.Relational
 object FeatureQueries {
 
   /** The oracle both PIT paths share — results must be identical
-    * whether the engine walks union+window or the intervalized join
-    * over the bucketed history.
+    * whether the as-of join shuffles the feature history or reads it
+    * bucketed in place.
     */
   private val PitOracle: String =
     """WITH f AS (
@@ -179,12 +179,11 @@ object FeatureQueries {
 
     // SCD2 / temporal-table view: each observation becomes a
     // [valid_from, valid_to) version row via lead() — the history-table
-    // build behind point-in-time semantics (the intervalized form the
-    // bucketed feature-store PIT path joins against). Partitioned
-    // window, one shuffle on the entity key. The open-interval sentinel
-    // must stay below the int64-nanosecond horizon (2262-04-11): the
-    // events column is TIMESTAMP(NANOS) parquet and a 9999-12-31
-    // sentinel overflows any ns-canonicalizing reader.
+    // build behind point-in-time semantics. Partitioned window, one
+    // shuffle on the entity key. The open-interval sentinel must stay
+    // below the int64-nanosecond horizon (2262-04-11): the events
+    // column is TIMESTAMP(NANOS) parquet and a 9999-12-31 sentinel
+    // overflows any ns-canonicalizing reader.
     sql("q_scd2")(
       """SELECT user_id, ts AS valid_from,
         |  coalesce(lead(ts) OVER (PARTITION BY user_id
@@ -369,11 +368,11 @@ object FeatureQueries {
 
     // The SAME point-in-time training set over a bucketed feature
     // history — the 100 TB as-of-join story (SURVEY §7 risk #1): the
-    // feature table is materialized once, bucketed+sorted by the
-    // entity key, and the PIT build joins the intervalized history
-    // with ZERO shuffle on the (huge) feature side — only the query
-    // side moves. Same oracle as q_feature_pit: the two paths must be
-    // row-identical. BucketingSpec pins the shuffle-free plan shape.
+    // feature table is materialized once, bucketed by the entity key,
+    // and the same as-of join reads it in place with ZERO shuffle on
+    // the (huge) feature side — only the query side moves. Same oracle
+    // as q_feature_pit: the two paths must be row-identical.
+    // BucketingSpec pins the shuffle-free plan shape.
     sql("q_feature_pit_bucketed")(PitOracle) { (s, dir) =>
       // The feature history is imported ONCE per events input (memoized:
       // verify, warm and timed passes reuse it). The table is named
@@ -383,33 +382,23 @@ object FeatureQueries {
       val key = graft.ops.Memo.key(Seq(events), "pit_bucketed")
       val tbl = graft.ops.Memo.value(key) {
         val name = "graft_pit_features_" + key.take(32)
-        // Idempotent across JVMs: a previous run's warehouse dir may
-        // survive while the in-memory catalog entry does not —
-        // saveAsTable then fails with LOCATION_ALREADY_EXISTS. Clear
-        // both before rebuilding.
-        s.sql(s"DROP TABLE IF EXISTS $name")
-        val loc = new org.apache.hadoop.fs.Path(
-          s.conf.get("spark.sql.warehouse.dir"), name)
-        val fs = loc.getFileSystem(s.sparkContext.hadoopConfiguration)
-        if (fs.exists(loc)) fs.delete(loc, true)
         val w = Window.partitionBy(col("user_id"))
           .orderBy(col("ts"), col("event_id"))
-        events.filter(col("event_type") === "purchase")
-          .select(col("user_id"), col("ts"),
-            row_number().over(w).cast(LongType).as("n_purchases"),
-            sum(col("value").cast(DecimalType(18, 2)))
-              .over(w.rowsBetween(Window.unboundedPreceding,
-                Window.currentRow))
-              .cast(DoubleType).as("total_purchase"))
-          .write.mode("overwrite").format("parquet")
-          .bucketBy(32, "user_id").sortBy("user_id", "ts")
-          .saveAsTable(name)
+        graft.io.Bucketing.writeBucketed(
+          events.filter(col("event_type") === "purchase")
+            .select(col("user_id"), col("ts"),
+              row_number().over(w).cast(LongType).as("n_purchases"),
+              sum(col("value").cast(DecimalType(18, 2)))
+                .over(w.rowsBetween(Window.unboundedPreceding,
+                  Window.currentRow))
+                .cast(DoubleType).as("total_purchase")),
+          name, "user_id", 32)
         name
       }
       val queries = events.filter(col("event_type") === "click")
         .select("event_id", "user_id", "ts")
-      Relational.asofJoinIntervalized(queries, s.table(tbl),
-          "user_id", "ts", "ts", Seq("n_purchases", "total_purchase"))
+      Relational.asofJoin(queries, s.table(tbl), "user_id", "ts", "ts",
+          Seq("n_purchases", "total_purchase"))
         .filter(col("asof_n_purchases").isNotNull)
         .select(col("event_id"), col("user_id"), col("ts"),
           col("asof_n_purchases").as("n_purchases"),

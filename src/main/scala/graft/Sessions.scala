@@ -201,8 +201,14 @@ object Sessions {
     * the repo's `spark-warehouse/`, where they outlive the catalog and
     * wedge later runs with LOCATION_ALREADY_EXISTS or pile up on disk.
     */
-  def tempWarehouse(): String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft-warehouse")
+  def tempWarehouse(): String =
+    tempDirDeletedOnExit("graft-warehouse").toUri.toString
+
+  /** A fresh directory under `java.io.tmpdir`, deleted with everything
+    * in it when the JVM exits.
+    */
+  def tempDirDeletedOnExit(prefix: String): java.nio.file.Path = {
+    val dir = java.nio.file.Files.createTempDirectory(prefix)
     Runtime.getRuntime.addShutdownHook(new Thread(() => {
       def rm(f: java.io.File): Unit = {
         val kids = f.listFiles()
@@ -211,6 +217,6 @@ object Sessions {
       }
       rm(dir.toFile)
     }))
-    dir.toUri.toString
+    dir
   }
 }

@@ -154,35 +154,35 @@ final class FeatureStore(spark: SparkSession, root: String) {
   /** Compact the append-only value history into a BUCKETED table
     * (bucketBy entity id) — the write-once step that makes every
     * subsequent point-in-time retrieval shuffle-free on the feature
-    * side. Run after bulk-import bursts; bucket count should match the
-    * cluster's shuffle parallelism (see Relational.asofJoinIntervalized).
+    * side: the query side is moved into the bucket layout instead (see
+    * Relational.asofJoin). Run after bulk-import bursts.
     */
   def compactBucketed(entityType: String, entityIdCol: String,
                       table: String, buckets: Int): Unit =
     graft.io.Bucketing.writeBucketed(readValues(entityType), table,
       entityIdCol, buckets)
 
-  /** Offline point-in-time read over a [[compactBucketed]] table:
-    * intervalized as-of join that shuffles ONLY the query side
-    * (plan-asserted in FeatureStoreSpec). Semantics identical to
-    * [[pointInTime]].
+  /** Offline point-in-time read over a [[compactBucketed]] table: the
+    * same as-of join as [[pointInTime]], which reads the bucketed table
+    * in place and shuffles ONLY the query side (plan-asserted in
+    * FeatureStoreSpec).
     */
   def pointInTimeBucketed(table: String, queries: DataFrame,
                           entityIdCol: String, asOfTsCol: String,
                           featureCols: Seq[String]): DataFrame =
-    Relational.asofJoinIntervalized(queries, spark.table(table),
-      entityIdCol, asOfTsCol, "feature_ts", featureCols)
+    Relational.asofJoin(queries, spark.table(table), entityIdCol,
+      asOfTsCol, "feature_ts", featureCols)
 
   /** Streaming serving-side point-in-time read — the consume
     * counterpart of [[streamingImport]]: each micro-batch of
     * (entity, asOfTs) query rows is as-of joined against a
-    * [[compactBucketed]] feature table through the intervalized path
-    * (shuffles ONLY the query side) and written to its own
-    * `batch=<id>` partition, so a replayed batch after a crash
-    * rewrites the same files instead of duplicating output (the
-    * idempotentAppendLoop sink shape). PIT semantics are unchanged: a
-    * query row never reads a feature value stamped after its as-of
-    * time, even when newer values already sit in the table.
+    * [[compactBucketed]] feature table (the as-of join of
+    * [[pointInTimeBucketed]], which shuffles ONLY the query side) and
+    * written to its own `batch=<id>` partition, so a replayed batch
+    * after a crash rewrites the same files instead of duplicating
+    * output (the idempotentAppendLoop sink shape). PIT semantics are
+    * unchanged: a query row never reads a feature value stamped after
+    * its as-of time, even when newer values already sit in the table.
     *
     * 100 TB note: per-batch cost is the micro-batch-sized query
     * shuffle — the petabyte-scale bucketed feature history is never
@@ -207,9 +207,8 @@ final class FeatureStore(spark: SparkSession, root: String) {
           // Resolve the feature table via the micro-batch's own session
           // (the documented foreachBatch pattern) so catalog/config
           // state can't diverge from the outer session's.
-          Relational.asofJoinIntervalized(batch,
-              batch.sparkSession.table(table), entityIdCol, asOfTsCol,
-              "feature_ts", featureCols)
+          Relational.asofJoin(batch, batch.sparkSession.table(table),
+              entityIdCol, asOfTsCol, "feature_ts", featureCols)
             .write.mode("overwrite").parquet(s"$outPath/batch=$batchId")
       }
       .start()

@@ -88,6 +88,12 @@ object Memo {
     catch { case e: Throwable => cells.remove(key, cell); throw e }
   }
 
+  /** One directory holds every parquet artifact of this JVM and is
+    * deleted when the JVM exits: an entry never outlives its JVM.
+    */
+  private lazy val artifactRoot =
+    graft.Sessions.tempDirDeletedOnExit("graft_memo")
+
   /** A parquet-backed copy of `build`, written at most once per `key`.
     * Writing truncates the plan: re-deriving a loop or self-join result
     * through `.persist()` drags a nested-cache lineage that Spark
@@ -99,8 +105,8 @@ object Memo {
     val spark = SparkSession.active
     val (dir, schema) = value(key) {
       val df = build
-      val dir = java.nio.file.Files.createTempDirectory("graft_memo")
-        .toString
+      val dir = java.nio.file.Files
+        .createTempDirectory(artifactRoot, "artifact").toString
       // REBALANCE: coalesce the write to advisory-size files; an
       // artifact that inherits 32 tiny files costs every consumer scan
       // a reader setup per split (~0.4-0.5 s per q_graph_degree run).

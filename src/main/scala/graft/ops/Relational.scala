@@ -1,8 +1,11 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.expressions.Attribute
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
 
 import graft.Hints.MergeHintOps
 
@@ -35,8 +38,15 @@ object Relational {
     * 100 TB design: this is the union+window formulation — ONE shuffle on
     * the key, per-key sort by time, O(n log n); it never materializes the
     * (query × candidate-feature) range-join blowup. Skewed keys ride on
-    * AQE; for a persistent feature table, pre-bucket by key so the shuffle
-    * disappears entirely.
+    * AQE.
+    *
+    * A right side that is already hash-partitioned on exactly `key` (the
+    * scan of a table bucketed by it, see `Bucketing.writeBucketed`) stays
+    * where it is: the left is repartitioned into the same layout, `Union`
+    * keeps a partitioning all its children share
+    * (`spark.sql.unionOutputPartitioning`), and the window adds no
+    * Exchange — only the left side moves. Without that conf, or for any
+    * other right side, both sides shuffle; the rows are the same.
     */
   def asofJoin(left: DataFrame, right: DataFrame, key: String,
                leftTs: String, rightTs: String,
@@ -45,8 +55,18 @@ object Relational {
     require(direction == "backward" || direction == "forward",
       s"direction must be backward|forward, got $direction")
     val leftCols = left.columns
+    // Move the left into a right side's hash partitioning on the key.
+    // Read it from `sparkPlan`: on `executedPlan`, AQE and the
+    // unnecessary-bucketed-scan rule report a bare bucketed scan as
+    // UnknownPartitioning.
+    val placed = right.queryExecution.sparkPlan.outputPartitioning match {
+      case HashPartitioning(Seq(a: Attribute), n)
+          if SQLConf.get.resolver(a.name, key) =>
+        left.repartition(n, col(key))
+      case _ => left
+    }
     // Align schemas: left payload + null feature slots, and vice versa.
-    val lNorm = left
+    val lNorm = placed
       .withColumn("__ts", col(leftTs))
       .withColumn("__isq", lit(1))
     val rNorm0 = right.select(
@@ -101,51 +121,6 @@ object Relational {
       sorted.rdd.zipWithIndex().map { case (r, i) =>
         Row.fromSeq(r.toSeq :+ i) },
       schema)
-  }
-
-  /** Point-in-time as-of join specialized for a PRE-BUCKETED feature
-    * table (the FeatureStore 100 TB note made concrete). The generic
-    * [[asofJoin]] unions both sides before its window, and `Union`
-    * discards child partitioning — so bucketing the feature table can
-    * never make THAT formulation shuffle-free. This variant keeps the
-    * feature side entirely in its bucket layout:
-    *
-    *  1. intervalize: per key, each feature row owns the half-open
-    *     validity interval [feature_ts, next feature_ts). The window
-    *     partitions by the bucket key, so over a bucketed scan it needs
-    *     NO Exchange (HashPartitioning(key, buckets) already satisfies
-    *     its distribution) — only a local sort.
-    *  2. join: each query row equi-joins on the key and lands in exactly
-    *     one interval (`asOfTs >= start && (end IS NULL || asOfTs <
-    *     end)`) — 1:1, no range-join pair blowup. The sort-merge join
-    *     reuses the feature side's bucket partitioning; ONLY the query
-    *     side shuffles. Plan-verified in FeatureStoreSpec.
-    *
-    * Tie semantics match [[asofJoin]]: among equal-ts feature rows the
-    * greatest value tuple wins (it sorts last, so every earlier
-    * duplicate gets an empty [t, t) interval no query can land in).
-    * Queries before the first feature keep null feature slots (left
-    * join). Choose the bucket count to match the cluster's shuffle
-    * parallelism or EnsureRequirements re-shuffles the bucketed side.
-    */
-  def asofJoinIntervalized(queries: DataFrame, values: DataFrame,
-                           key: String, leftTs: String, rightTs: String,
-                           valueCols: Seq[String]): DataFrame = {
-    val intervals = values
-      .select((col(key).as("__k") +: col(rightTs).as("__start") +:
-        valueCols.map(c => col(c).as(s"asof_$c"))): _*)
-      .withColumn("__end", lead(col("__start"), 1).over(
-        Window.partitionBy(col("__k")).orderBy(
-          (col("__start").asc +:
-            valueCols.map(c => col(s"asof_$c").asc_nulls_first)): _*)))
-    val leftCols = queries.columns.toSeq
-    queries.join(intervals,
-        queries(key) === intervals("__k") &&
-          col(leftTs) >= col("__start") &&
-          (col("__end").isNull || col(leftTs) < col("__end")),
-        "left")
-      .select((leftCols.map(col) ++
-        valueCols.map(c => col(s"asof_$c"))): _*)
   }
 
   /** Online-serving view: latest feature row per entity (A15,

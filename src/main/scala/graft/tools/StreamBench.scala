@@ -342,7 +342,8 @@ object StreamBench {
 
     // streaming PIT serving: 1M-row bucketed feature history (200k
     // entities × 5 versions), query stream as-of joined per micro-batch
-    // through the intervalized path, per-batch parquet sink included
+    // against the bucketed table in place, per-batch parquet sink
+    // included
     val nEnt = 200000L
     val featDf = spark.range(nEnt * 5).select(
       (col("id") % nEnt).as("user_id"),

@@ -1,8 +1,11 @@
 package graft.feature
 
-import java.nio.file.Files
 import java.sql.Timestamp
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.{SparkPlan, UnionExec}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -13,7 +16,7 @@ class FeatureStoreSpec extends SparkSpec {
   private def ts(s: String) = Timestamp.valueOf(s)
 
   private def withStore(f: FeatureStore => Unit): Unit = {
-    val root = Files.createTempDirectory("fstest").toString
+    val root = graft.Sessions.tempDirDeletedOnExit("fstest").toString
     f(new FeatureStore(spark, root))
   }
 
@@ -48,7 +51,7 @@ class FeatureStoreSpec extends SparkSpec {
     import org.apache.spark.sql.streaming.Trigger
     withStore { fs =>
       fs.createEntityType(EntityTypeDef("users", "user_id", Seq.empty))
-      val root = Files.createTempDirectory("fsstream").toString
+      val root = graft.Sessions.tempDirDeletedOnExit("fsstream").toString
       val in = MemoryStream[(Long, Double, Timestamp)]
       val q = fs.streamingImport("users",
         in.toDF().toDF("user_id", "rating", "event_ts"), "event_ts",
@@ -81,7 +84,7 @@ class FeatureStoreSpec extends SparkSpec {
         Seq((1L, 20.0)).toDF("user_id", "rating"), "user_id",
         Some(ts("2024-03-01 00:00:00")))
       fs.compactBucketed("users", "user_id", "b_pit_stream", 4)
-      val root = Files.createTempDirectory("fspitstream").toString
+      val root = graft.Sessions.tempDirDeletedOnExit("fspitstream").toString
       val in = MemoryStream[(Long, Timestamp)]
       val q = fs.streamingPointInTime("b_pit_stream",
         in.toDF().toDF("user_id", "as_of"), "user_id", "as_of",
@@ -160,8 +163,15 @@ class FeatureStoreSpec extends SparkSpec {
     }
   }
 
-  test("bucketed PIT: intervalized as-of is row-identical to asofJoin " +
-      "and shuffles only the query side (100 TB note, plan-asserted)") {
+  /** The executed physical plan, through an adaptive root. */
+  private def physical(df: DataFrame): SparkPlan =
+    df.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.executedPlan
+      case p => p
+    }
+
+  test("bucketed PIT: asofJoin reads the bucketed table in place, " +
+      "row-identical to asofJoin over the plain values (plan-asserted)") {
     import graft.io.Bucketing
     import graft.ops.Relational
     val values = Seq(
@@ -171,8 +181,6 @@ class FeatureStoreSpec extends SparkSpec {
       (2L, ts("2024-02-01 00:00:00"), 5.0),
       (3L, ts("2024-06-01 00:00:00"), 7.0))
       .toDF("user_id", "feature_ts", "rating")
-    // Feature table written bucketed by entity — bucket count matches
-    // the session's shuffle parallelism so EnsureRequirements keeps it.
     Bucketing.writeBucketed(values, "b_pit_vals", "user_id", 4)
     try {
       val queries = Seq(
@@ -182,22 +190,71 @@ class FeatureStoreSpec extends SparkSpec {
         (2L, ts("2024-01-15 00:00:00")), // before first -> null
         (4L, ts("2024-05-01 00:00:00"))) // unknown entity -> null
         .toDF("user_id", "as_of")
-      val fast = Relational.asofJoinIntervalized(
-        queries.hint("merge"), spark.table("b_pit_vals"),
-        "user_id", "as_of", "feature_ts", Seq("rating"))
-      val ref = Relational.asofJoin(queries, values, "user_id",
-        "as_of", "feature_ts", Seq("rating"))
-      assert(fast.exceptAll(ref).isEmpty && ref.exceptAll(fast).isEmpty)
+      def bucketedMatchesPlain(direction: String): DataFrame = {
+        val fast = Relational.asofJoin(queries, spark.table("b_pit_vals"),
+          "user_id", "as_of", "feature_ts", Seq("rating"), direction)
+        val ref = Relational.asofJoin(queries, values, "user_id",
+          "as_of", "feature_ts", Seq("rating"), direction)
+        assert(fast.exceptAll(ref).isEmpty && ref.exceptAll(fast).isEmpty,
+          direction)
+        fast
+      }
+      val hashExchanges = "Exchange hashpartitioning".r
+      val fast = bucketedMatchesPlain("backward")
       assert(fast.filter($"user_id" === 1 &&
         $"as_of" === ts("2024-03-01 00:00:00"))
         .select("asof_rating").as[Double].head() == 30.0)
-      // The 100 TB contract: the bucketed feature scan feeds BOTH its
-      // intervalizing window AND the sort-merge join with no Exchange;
-      // the single hash shuffle in the plan belongs to the query side.
-      val plan = fast.queryExecution.executedPlan.toString
-      assert(plan.contains("SortMergeJoin"), plan)
-      assert("Exchange hashpartitioning".r.findAllMatchIn(plan).size == 1,
-        plan)
+      assert(fast.filter($"user_id" === 2).select("asof_rating")
+        .as[Option[Double]].head().isEmpty)
+      // The 100 TB contract: the bucketed feature scan feeds the union
+      // and its window with no Exchange; the single hash shuffle in the
+      // plan moves the query side into the bucket layout. No join.
+      val plan = physical(fast)
+      assert(!plan.toString.contains("Join"), plan)
+      assert(hashExchanges.findAllMatchIn(plan.toString).size == 1, plan)
+      assert(plan.collect { case e: ShuffleExchangeLike => e }
+        .forall(_.find(_.isInstanceOf[UnionExec]).isEmpty), plan)
+      // Forward direction over the same bucketed table.
+      bucketedMatchesPlain("forward")
+      // The rows do not rest on the plan shape: with Union dropping its
+      // children's partitioning, the window shuffles both sides again.
+      val conf = "spark.sql.unionOutputPartitioning"
+      val prev = spark.conf.get(conf)
+      try {
+        spark.conf.set(conf, "false")
+        val shuffled = physical(bucketedMatchesPlain("backward")).toString
+        assert(hashExchanges.findAllMatchIn(shuffled).size == 2, shuffled)
+      } finally spark.conf.set(conf, prev)
     } finally spark.sql("DROP TABLE IF EXISTS b_pit_vals")
+  }
+
+  test("long history: 10^4 bucketed PIT queries over one entity's 10^5 " +
+      "versions read the closed-form value, with no join") {
+    withStore { fs =>
+      fs.createEntityType(EntityTypeDef("users", "user_id", Seq.empty))
+      // The version stamped at second i has value i.
+      fs.importWithEventTime("users", spark.range(100000).select(
+          lit(1L).as("user_id"), timestamp_seconds($"id").as("at"),
+          $"id".as("v")), "at")
+      fs.compactBucketed("users", "user_id", "b_long_vals", 4)
+      try {
+        // Query j asks at 10·j s, half a second later for odd j; the
+        // first asks one second before the first version.
+        val queries = spark.range(10000).select(lit(1L).as("user_id"),
+          $"id".as("j"), timestamp_micros(
+            when($"id" === 0, -1000000L)
+              .otherwise($"id" * 10000000L + $"id" % 2 * 500000L))
+            .as("as_of"))
+        val out = fs.pointInTimeBucketed("b_long_vals", queries,
+          "user_id", "as_of", Seq("v"))
+        val got = out.select($"j", $"asof_v").as[(Long, Option[Long])]
+          .collect().toMap
+        assert(got.size == 10000)
+        assert(got(0L).isEmpty, "a query before the first version")
+        (1L until 10000L).foreach(j => assert(got(j).contains(10 * j), j))
+        val plan = physical(out)
+        assert(!plan.toString.contains("Join"), plan)
+      } finally spark.sql("DROP TABLE IF EXISTS b_long_vals")
+    }
   }
 }

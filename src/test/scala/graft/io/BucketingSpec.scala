@@ -50,8 +50,8 @@ class BucketingSpec extends SparkSpec {
         val df = graft.Queries.queries("q_feature_pit_bucketed")(spark, dir)
         val plan = df.queryExecution.executedPlan.toString
         // exactly ONE hash Exchange: the click/query side moving to the
-        // feature table's bucket partitioning. The feature-side window
-        // (interval build) and join read the bucketed scan in place.
+        // feature table's bucket partitioning. The as-of window reads
+        // the bucketed scan in place.
         val exchanges = "Exchange hashpartitioning".r
           .findAllIn(plan).length
         assert(exchanges == 1,
