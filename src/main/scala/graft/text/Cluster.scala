@@ -1,120 +1,202 @@
 package graft.text
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.collection.mutable
+
+import org.apache.spark.sql.{DataFrame, Encoders}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, LongType}
 
 /** Connected components over a near-duplicate pair graph — the
   * clustering step of a dedup pipeline (pairs → groups → one canonical
-  * doc per group). Min-label propagation to fixpoint: every node ends
-  * labeled with the smallest doc id reachable from it, matching the
-  * recursive-CTE oracle exactly.
+  * doc per group). Every node ends labeled with the smallest doc id
+  * reachable from it, matching the recursive-CTE oracle exactly.
   *
-  * Scale: each iteration is one join + one aggregation on the edge
-  * list (both shuffles on node id); iterations needed = graph diameter
-  * (near-dup clusters are tiny cliques, so 2-3 in practice; a chain
-  * longer than `maxIter` hops refuses instead of returning partial
-  * labels). Driver holds only the convergence counter, never the
-  * graph.
+  * The labels come from a union-find that runs inside executor tasks;
+  * the driver sees only counts, never the graph. An edge list small
+  * enough for one task (every near-dup graph in this repo) is one
+  * union-find in one task. A larger one is contracted by a union-find
+  * per hash partition and then by large-star/small-star rounds
+  * (Kiveris et al., SoCC 2014: O(log² n) rounds) until it fits one
+  * task or every component is a star around its min id.
   */
 object Cluster {
 
   /** @param vertices one column `id`
     * @param edges    columns `src`, `dst` (undirected, any orientation)
-    * @return (id, component) with component = min id in the component
+    * @param maxIter  rounds that may rewrite the edge list (the
+    *        per-partition contraction and each large-star/small-star
+    *        pair) before the method refuses with an
+    *        `IllegalStateException`; an edge list that fits one task
+    *        needs none
+    * @param edgesPerPartition edges one union-find task may hold: the
+    *        symmetrized edge list (twice the input edges) below it is
+    *        labeled in one task, above it the contraction hashes the
+    *        edges into partitions of about this size
+    * @return (id, component) for every vertex and every edge endpoint,
+    *         component = min id in the component; isolated vertices are
+    *         singletons. Ids must be `LongType` or `IntegerType` (the
+    *         output takes the wider of the input types); any other id
+    *         type is refused with an `IllegalArgumentException`. An edge
+    *         with a null endpoint joins nothing.
     *
-    * Only vertices incident to an edge can ever receive a label other
-    * than their own id, so the fixpoint loop runs on the edge-touched
-    * subgraph alone; isolated vertices re-enter as singletons in one
-    * final anti-join. In a near-dup corpus the touched set is a small
-    * fraction of the vertex set — at 100 TB this is the difference
-    * between shuffling the dup subgraph per iteration and shuffling
-    * every document per iteration.
+    * The labels are materialized before the method returns, so a
+    * caller may release the edge list right after it.
     */
   def connectedComponents(vertices: DataFrame, edges: DataFrame,
                           maxIter: Int = 20,
                           edgesPerPartition: Long = 1000000L): DataFrame = {
-    val symRaw = edges.select(col("src"), col("dst"))
-      .unionAll(edges.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct()
-    // The fixpoint loop runs at a parallelism sized to the SUBGRAPH,
-    // not the corpus: near-dup edge lists are orders of magnitude
-    // smaller than the input, and iterating a tiny graph across
-    // corpus-scale shuffle partitions pays per-task overhead ×
-    // iterations for nothing. One count sizes it (~16 MB of longs per
-    // partition); hash-partitioning `sym` on src once lets every
-    // iteration's join reuse the cached layout and shuffle only the
-    // label side.
-    // Cache BEFORE the sizing count: edge production (e.g. the n-gram
-    // posting join upstream) is the expensive part, and an uncached
-    // symRaw would re-run it to fill the repartitioned cache below.
-    val symC = symRaw.cache()
-    val nEdges = symC.count()
-    val parts = math.max(1L, math.min(
-      edges.sparkSession.sparkContext.defaultParallelism.toLong,
-      nEdges / edgesPerPartition + 1L)).toInt
-    val sym = symC.repartition(parts, col("src")).cache()
-    // `sym` holds both orientations, so src alone covers every endpoint.
-    val touched = sym.select(col("src").as("id")).distinct()
-    var labels = touched.select(col("id"), col("id").as("component"))
+    val types = Seq(vertices.schema("id"), edges.schema("src"),
+      edges.schema("dst")).map(_.dataType)
+    types.find(t => t != LongType && t != IntegerType).foreach { t =>
+      throw new IllegalArgumentException(
+        s"connectedComponents takes LongType or IntegerType ids, not ${t.sql}")
+    }
+    val idType = if (types.contains(LongType)) LongType else IntegerType
+    // Cached: edge production (e.g. the n-gram posting join upstream)
+    // is the expensive part, and the sizing count plus every round
+    // read the edges. Each edge is stored once, larger endpoint first.
+    val e = edges.where(col("src").isNotNull && col("dst").isNotNull)
+      .select(greatest(col("src"), col("dst")).cast(LongType).as("src"),
+        least(col("src"), col("dst")).cast(LongType).as("dst"))
       .cache()
-    // Labels only ever decrease (min-propagation), so Σcomponent
-    // strictly decreases until the fixpoint — convergence is one cheap
-    // aggregate per iteration, no join-with-previous needed.
-    // coalesce: an edge-free graph leaves the touched set empty and
-    // SUM over zero rows is NULL.
-    var prevSum = labels.agg(coalesce(sum("component"), lit(0L)))
-      .collect()(0).getLong(0)
-    var converged = false
-    var iter = 0
-    while (!converged && iter < maxIter) {
-      // candidate label for dst = component of src; keep the min of
-      // (own component, best neighbor candidate)
-      // shuffle_hash hint: labels' cached node-sized estimate would
-      // otherwise auto-broadcast it every iteration — wrong at 50M+
-      // nodes. SHJ keeps the intended plan: sym's hash layout reused
-      // sort-free, only the label side shuffles.
-      val candidates = sym.join(labels.hint("shuffle_hash"),
-          sym("src") === labels("id"))
-        .select(col("dst").as("id"), col("component"))
-      // Explicit repartition pins the aggregation to the subgraph-sized
-      // partition count (the session-wide shuffle.partitions knob is
-      // sized for the corpus); groupBy reuses the layout, so this is
-      // still exactly one exchange per iteration.
-      // localCheckpoint, not cache, cuts the lineage: a cached `next`
-      // nests the previous labels twice (union and join), so the plan
-      // and AQE's per-execution explain string double per iteration (a
-      // 25-hop chain ran the JVM out of heap near iteration 20).
-      val next = labels.unionByName(candidates)
-        .repartition(parts, col("id"))
-        .groupBy("id").agg(min("component").as("component"))
-        .localCheckpoint(eager = false)
-      val newSum = next.agg(coalesce(sum("component"), lit(0L)))
-        .collect()(0).getLong(0)
-      labels.unpersist()
-      labels = next
-      converged = newSum == prevSum
-      prevSum = newSum
-      iter += 1
-    }
-    symC.unpersist()
-    sym.unpersist()
-    if (!converged) {
-      labels.unpersist()
-      throw new IllegalStateException(
-        s"connectedComponents did not converge in maxIter=$maxIter " +
-          "iterations: a component spans more hops than that, so its " +
-          "labels would be partial. Raise maxIter.")
-    }
-    val isolated = vertices.select(col("id"))
-      .join(labels.select(col("id")), Seq("id"), "left_anti")
+    val labels = try components(e, maxIter, edgesPerPartition)
+        .localCheckpoint(eager = true)
+      finally e.unpersist()
+    val out = labels.select(col("id").cast(idType),
+      col("component").cast(idType))
+    val isolated = vertices.select(col("id").cast(idType))
+      .join(out.select(col("id")), Seq("id"), "left_anti")
       .select(col("id"), col("id").as("component"))
-    labels.unionByName(isolated)
+    out.unionByName(isolated)
+  }
+
+  /** (id, component) for every endpoint of the normalized edge list `e`. */
+  private def components(e: DataFrame, maxIter: Int,
+                         edgesPerPartition: Long): DataFrame = {
+    var g = e
+    var edgeCount = e.count()
+    var offStar = -1L
+    var round = 0
+    while (2 * edgeCount >= edgesPerPartition && offStar != 0) {
+      if (round == maxIter) throw new IllegalStateException(
+        s"connectedComponents did not converge in maxIter=$maxIter " +
+          "rounds: its edge list neither fits one task nor has become " +
+          "one star per component, so its labels would be partial. " +
+          "Raise maxIter.")
+      // localCheckpoint cuts the lineage, so a round's plan does not
+      // nest every earlier round.
+      g = (if (round == 0) contract(g, 2 * edgeCount / edgesPerPartition + 1)
+        else smallStar(largeStar(g))).localCheckpoint(eager = true)
+      round += 1
+      val (n, off) = shape(g)
+      edgeCount = n
+      offStar = off
+    }
+    val labels =
+      if (2 * edgeCount < edgesPerPartition) unionFind(g.coalesce(1))
+      else g.select(col("src").as("id"), col("dst").as("component"))
+        .unionAll(g.select(col("dst").as("id"), col("dst").as("component"))
+          .distinct())
+    if (round == 0) labels
+    else {
+      // The rounds drop self-loops; a node that has nothing else keeps
+      // its own label.
+      val loops = e.where(col("src") === col("dst")).select(col("src").as("id"))
+        .distinct().join(labels.select(col("id")), Seq("id"), "left_anti")
+      labels.unionByName(loops.select(col("id"), col("id").as("component")))
+    }
+  }
+
+  private val pair = Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong)
+
+  /** One union-find per partition of `g` (columns `src`, `dst`): (id,
+    * min id of its component among the partition's edges) for every
+    * endpoint. The distinct endpoints are sorted into a `long[]` and
+    * unioned by index, so the smaller index — the smaller id — is
+    * always the root; ~40 bytes per edge.
+    */
+  private def unionFind(g: DataFrame): DataFrame =
+    g.as(pair).mapPartitions { it =>
+      val (src, dst) = (new mutable.ArrayBuilder.ofLong, new mutable.ArrayBuilder.ofLong)
+      it.foreach { case (a, b) => src += a; dst += b }
+      val (a, b) = (src.result(), dst.result())
+      val ids = java.util.Arrays.copyOf(a, a.length + b.length)
+      System.arraycopy(b, 0, ids, a.length, b.length)
+      java.util.Arrays.sort(ids)
+      var k = 0
+      for (i <- ids.indices if k == 0 || ids(i) != ids(k - 1)) {
+        ids(k) = ids(i)
+        k += 1
+      }
+      val parent = Array.tabulate(k)(identity)
+      def find(i0: Int): Int = {
+        var i = i0
+        while (parent(i) != i) {
+          parent(i) = parent(parent(i))
+          i = parent(i)
+        }
+        i
+      }
+      def root(x: Long) = find(java.util.Arrays.binarySearch(ids, 0, k, x))
+      for (j <- a.indices) {
+        val (r, s) = (root(a(j)), root(b(j)))
+        if (r < s) parent(s) = r else parent(r) = s
+      }
+      Iterator.tabulate(k)(i => (ids(i), ids(find(i))))
+    }(pair).toDF("id", "component")
+
+  /** A union-find over each of `parts` hash partitions: every partition
+    * becomes a forest of stars, one edge from each node to its
+    * partition-local min. Connectivity is unchanged and no partition
+    * emits more edges than it read.
+    */
+  private def contract(g: DataFrame, parts: Long): DataFrame =
+    unionFind(g.repartition(parts.toInt, col("src")))
+      .where(col("id") =!= col("component"))
+      .select(col("id").as("src"), col("component").as("dst"))
+
+  /** Large-star: each node's larger neighbors move to the min of its
+    * closed neighborhood.
+    */
+  private def largeStar(g: DataFrame): DataFrame = {
+    val adj = g.select(col("src").as("u"), col("dst").as("v"))
+      .unionAll(g.select(col("dst").as("u"), col("src").as("v")))
+    adj.select(col("u"), col("v"),
+        least(col("u"), min("v").over(Window.partitionBy("u"))).as("m"))
+      .where(col("v") > col("u"))
+      .select(col("v").as("src"), col("m").as("dst")).distinct()
+  }
+
+  /** Small-star: each node and its smaller neighbors move to the min of
+    * those neighbors. Needs `src` > `dst`, as every round emits.
+    */
+  private def smallStar(g: DataFrame): DataFrame = {
+    val w = g.select(col("src"), col("dst"),
+      min("dst").over(Window.partitionBy("src")).as("m"))
+    w.select(col("dst").as("src"), col("m").as("dst"))
+      .unionAll(w.select(col("src"), col("m").as("dst")))
+      .where(col("src") =!= col("dst")).distinct()
+  }
+
+  /** (edges, nodes off the min-star shape) of `g`, whose every edge runs
+    * from a larger to a smaller id: it is one star per component,
+    * centered on the component's min, iff no node has two out-edges or
+    * both an out- and an in-edge.
+    */
+  private def shape(g: DataFrame): (Long, Long) = {
+    val ends = g.select(col("src").as("v"), lit(1L).as("out"), lit(0L).as("in"))
+      .unionAll(g.select(col("dst").as("v"), lit(0L).as("out"), lit(1L).as("in")))
+      .groupBy("v").agg(sum("out").as("out"), max("in").as("in"))
+    val r = ends.agg(coalesce(sum("out"), lit(0L)),
+      count(when(col("out") + col("in") > 1, true))).head()
+    (r.getLong(0), r.getLong(1))
   }
 
   /** Dedup clustering end-to-end: near-dup pairs (exact n-gram Jaccard)
     * → connected components → (doc_id, component, is_canonical).
-    */
-  /** @param maxPairs same candidate-volume guard as the registered
+    *
+    * @param maxPairs same candidate-volume guard as the registered
     *        q_dedup_ngram: the posting self-join inside is
     *        output-quadratic on low-entropy vocabularies, and UNguarded
     *        it dies by spill instead of refusing (measured r21: at
@@ -135,12 +217,9 @@ object Cluster {
       guardHint = "(banded MinHash pairs + connectedComponents is the " +
         "corpus-scale clustering companion; SPARK_GRAFT_CLUSTER_PAIR_CAP " +
         "raises this pipeline's cap.)")
-    // Persisted, like the signature tables in Dedup: the edge list is
-    // tiny next to the corpus, feeds the sizing count plus every
-    // fixpoint iteration, and the posting self-join that produces it is
-    // the expensive stage — never recompute it.
-    val edges = pairs.select(col("doc_a").as("src"),
-      col("doc_b").as("dst")).persist()
+    // Not persisted: connectedComponents caches the edges it reads and
+    // returns materialized labels, so the posting self-join runs once.
+    val edges = pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
     val vertices = docs.select(col(idCol).as("id"))
     connectedComponents(vertices, edges)
       .withColumn("is_canonical", (col("id") === col("component"))
@@ -156,8 +235,8 @@ object Cluster {
     * several downstream reports (the cluster listing, survivor
     * selection, drop audits …) — a production pipeline computes it
     * ONCE and shares the table. The INPUT is the key, not the output
-    * plan: the loop runs eager sizing/convergence jobs while the output
-    * is built, so keying on it would re-run them per consumer.
+    * plan: the components run eager jobs while the output is built, so
+    * keying on it would re-run them per consumer.
     */
   def materializedClusters(docs: DataFrame, textCol: String, idCol: String,
                            n: Int, minJaccard: Double): DataFrame =
