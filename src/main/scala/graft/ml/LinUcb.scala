@@ -1,8 +1,12 @@
 package graft.ml
 
-import org.apache.spark.sql.{DataFrame, Encoder, Encoders, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoder, Encoders, Observation, Row,
+  SparkSession}
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+import scala.jdk.CollectionConverters._
 
 /** LinUCB contextual-bandit training as a Spark aggregation (reference:
   * trainer_component.py:71-92,122-130 — per-epoch pass accumulating
@@ -15,14 +19,24 @@ import org.apache.spark.sql.functions._
   * num_actions × (d² + d) doubles per partition regardless of input
   * size, so the pass scales to 100 TB of trajectories with one shuffle.
   * The tiny (actions × d²) solve for θ_a = A_a⁻¹ b_a happens on the
-  * driver — O(actions · d³) with d ≈ 20 is microseconds.
+  * driver ([[solve]]) — O(actions · d³) with d ≈ 20 is microseconds.
+  *
+  * The statistics are additive, so a stream of micro-batches needs no
+  * refit over its history: [[observeStats]] attaches one batch's
+  * per-action statistics to whatever job already scans the batch (a
+  * `Dataset.observe` metric, no job of its own), [[plus]] adds them to
+  * the running [[Totals]] on the driver, and [[solve]] turns the sums
+  * into a model (`graft.streaming.Streams.retrainLoop`).
   */
 object LinUcb {
 
   /** Sufficient statistics for one action: xx = Σ x xᵀ (row-major d×d),
     * bx = Σ r·x, n = row count.
     */
-  final case class Stats(xx: Array[Double], bx: Array[Double], n: Long)
+  final case class Stats(xx: Array[Double], bx: Array[Double], n: Long) {
+    def +(o: Stats): Stats = Stats(xx.lazyZip(o.xx).map(_ + _),
+      bx.lazyZip(o.bx).map(_ + _), n + o.n)
+  }
 
   /** Input row shape for the aggregator. */
   final case class Obs(action: Int, x: Array[Double], reward: Double)
@@ -57,6 +71,29 @@ object LinUcb {
     def bufferEncoder: Encoder[Stats] = Encoders.product[Stats]
     def outputEncoder: Encoder[Stats] = Encoders.product[Stats]
   }
+
+  /** [[StatsAgg]] for every action at once: no grouping, so it can run
+    * as a `Dataset.observe` metric. One (d² + d)-double buffer per action
+    * seen.
+    */
+  final class ActionStatsAgg(dim: Int)
+      extends Aggregator[Obs, Map[Int, Stats], Map[Int, Stats]] {
+    private val one = new StatsAgg(dim)
+    def zero: Map[Int, Stats] = Map.empty
+    def reduce(b: Map[Int, Stats], a: Obs): Map[Int, Stats] =
+      b.updated(a.action, one.reduce(b.getOrElse(a.action, one.zero), a))
+    def merge(u: Map[Int, Stats], v: Map[Int, Stats]): Map[Int, Stats] =
+      plus(u, v)
+    def finish(r: Map[Int, Stats]): Map[Int, Stats] = r
+    def bufferEncoder: Encoder[Map[Int, Stats]] = ExpressionEncoder()
+    def outputEncoder: Encoder[Map[Int, Stats]] = ExpressionEncoder()
+  }
+
+  /** Per-action sums of two sets of statistics. */
+  def plus(a: Map[Int, Stats], b: Map[Int, Stats]): Map[Int, Stats] =
+    b.foldLeft(a) { case (m, (action, s)) =>
+      m.updated(action, m.get(action).fold(s)(_ + s))
+    }
 
   /** Per-action model: θ = A⁻¹b plus A⁻¹ for the UCB exploration term. */
   final case class ActionModel(action: Int, theta: Array[Double],
@@ -97,47 +134,75 @@ object LinUcb {
     }
   }
 
+  private def obsCols(actionCol: String, obsCol: String,
+                      rewardCol: String) =
+    Seq(col(actionCol).cast("int").as("action"),
+      col(obsCol).cast("array<double>").as("x"),
+      col(rewardCol).cast("double").as("reward"))
+
   /** One distributed pass: groupBy(action) → sufficient stats. */
   def sufficientStats(df: DataFrame, actionCol: String, obsCol: String,
                       rewardCol: String, dim: Int): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
     val agg = new StatsAgg(dim).toColumn.name("stats")
-    df.select(col(actionCol).cast("int").as("action"),
-        col(obsCol).cast("array<double>").as("x"),
-        col(rewardCol).cast("double").as("reward"))
+    df.select(obsCols(actionCol, obsCol, rewardCol): _*)
       .as[Obs]
       .groupByKey(_.action)
       .agg(agg)
       .toDF("action", "stats")
   }
 
-  /** Train: one aggregation pass + driver-side d×d solves. The reference
-    * runs `epochs` identical passes (trainer_component.py:122-130); LinUCB
-    * statistics are additive so one pass over epochs× the data is
-    * equivalent — we keep `epochs` as a multiplier for parity.
+  /** [[sufficientStats]] collected to the driver, by action. */
+  def collectStats(df: DataFrame, actionCol: String, obsCol: String,
+                   rewardCol: String, dim: Int): Map[Int, Stats] =
+    sufficientStats(df, actionCol, obsCol, rewardCol, dim).collect()
+      .map(r => r.getInt(0) -> statsOf(r.getStruct(1))).toMap
+
+  /** `df` unchanged, with its per-action statistics attached as `seen`'s
+    * metric "stats": the first action over the result fills them in,
+    * inside its own job. Read them with [[observedStats]].
     */
+  def observeStats(df: DataFrame, seen: Observation, actionCol: String,
+                   obsCol: String, rewardCol: String, dim: Int): DataFrame =
+    df.observe(seen, udaf(new ActionStatsAgg(dim), Encoders.product[Obs])(
+      obsCols(actionCol, obsCol, rewardCol): _*).as("stats"))
+
+  /** The statistics [[observeStats]] attached; blocks until its action
+    * has run.
+    */
+  def observedStats(seen: Observation): Map[Int, Stats] =
+    seen.get("stats").asInstanceOf[scala.collection.Map[Int, Row]]
+      .map { case (action, s) => action -> statsOf(s) }.toMap
+
+  private def statsOf(s: Row): Stats =
+    Stats(s.getSeq[Double](0).toArray, s.getSeq[Double](1).toArray,
+      s.getLong(2))
+
+  /** The driver-side d×d solves: per action, A = epochs·Σ x xᵀ + λI,
+    * θ = A⁻¹ (epochs·Σ r x). The reference runs `epochs` identical passes
+    * (trainer_component.py:122-130); the statistics are additive, so
+    * one pass scaled by `epochs` is equivalent.
+    */
+  def solve(stats: Map[Int, Stats], dim: Int, alpha: Double = 1.0,
+            lambda: Double = 1.0, epochs: Int = 1): Model =
+    Model(dim, alpha, lambda, stats.toSeq.sortBy(_._1).map {
+      case (action, s) =>
+        val a = Array.tabulate(dim * dim) { k =>
+          val scaled = s.xx(k) * epochs
+          if (k / dim == k % dim) scaled + lambda else scaled
+        }
+        val aInv = invert(a, dim)
+        val theta = matVec(aInv, s.bx.map(_ * epochs), dim)
+        ActionModel(action, theta, aInv, s.n * epochs)
+    })
+
+  /** Train: one aggregation pass + [[solve]]. */
   def fit(df: DataFrame, actionCol: String, obsCol: String,
           rewardCol: String, dim: Int, alpha: Double = 1.0,
-          lambda: Double = 1.0, epochs: Int = 1): Model = {
-    val stats = sufficientStats(df, actionCol, obsCol, rewardCol, dim)
-      .collect()
-    val actions = stats.map { r =>
-      val action = r.getInt(0)
-      val s = r.getStruct(1)
-      val xx = s.getSeq[Double](0).toArray
-      val bx = s.getSeq[Double](1).toArray
-      val n = s.getLong(2)
-      val a = Array.tabulate(dim * dim) { k =>
-        val scaled = xx(k) * epochs
-        if (k / dim == k % dim) scaled + lambda else scaled
-      }
-      val aInv = invert(a, dim)
-      val theta = matVec(aInv, bx.map(_ * epochs), dim)
-      ActionModel(action, theta, aInv, n * epochs)
-    }
-    Model(dim, alpha, lambda, actions.sortBy(_.action).toSeq)
-  }
+          lambda: Double = 1.0, epochs: Int = 1): Model =
+    solve(collectStats(df, actionCol, obsCol, rewardCol, dim), dim, alpha,
+      lambda, epochs)
 
   /** Batch scoring (A19, prediction_container/main.py:61-85): predicted
     * UCB-greedy action per row. Model broadcasts (actions × d² doubles).
@@ -168,11 +233,51 @@ object LinUcb {
 
   // ---- persistence (A18, PolicySaver.save / saved_model.load) ---------
 
-  def save(spark: SparkSession, model: Model, path: String): Unit = {
-    import spark.implicits._
-    model.actions.map(a => (model.dim, model.alpha, model.lambda,
-        a.action, a.theta.toSeq, a.aInv.toSeq, a.n))
-      .toDF("dim", "alpha", "lambda", "action", "theta", "a_inv", "n")
+  /** A retrain loop's running sums: per-action statistics of every row
+    * through micro-batch `batchId`.
+    */
+  final case class Totals(batchId: Long, stats: Map[Int, Stats])
+
+  /** One parquet file, one row per action: dim, alpha, lambda, action,
+    * theta, a_inv, n.
+    */
+  def save(spark: SparkSession, model: Model, path: String): Unit =
+    write(spark, model, None, path)
+
+  /** [[save]] plus the loop's [[Totals]] in three more columns of the
+    * same rows: xx and bx (the action's sums) and batch_id, by which a
+    * restarted loop tells a replayed micro-batch from a new one. n is the
+    * model's, which equals the statistics' count for a model solved with
+    * `epochs` = 1. [[load]] ignores the extra columns.
+    */
+  private[graft] def save(spark: SparkSession, model: Model, totals: Totals,
+                          path: String): Unit =
+    write(spark, model, Some(totals), path)
+
+  private val ModelFields = Seq(StructField("dim", IntegerType, false),
+    StructField("alpha", DoubleType, false),
+    StructField("lambda", DoubleType, false),
+    StructField("action", IntegerType, false),
+    StructField("theta", ArrayType(DoubleType, false)),
+    StructField("a_inv", ArrayType(DoubleType, false)),
+    StructField("n", LongType, false))
+  private val TotalsFields = Seq(
+    StructField("xx", ArrayType(DoubleType, false)),
+    StructField("bx", ArrayType(DoubleType, false)),
+    StructField("batch_id", LongType, false))
+
+  private def write(spark: SparkSession, model: Model,
+                    totals: Option[Totals], path: String): Unit = {
+    val rows = model.actions.map { a =>
+      Row.fromSeq(Seq(model.dim, model.alpha, model.lambda, a.action,
+        a.theta.toSeq, a.aInv.toSeq, a.n) ++ totals.toSeq.flatMap { t =>
+          val s = t.stats(a.action)
+          Seq(s.xx.toSeq, s.bx.toSeq, t.batchId)
+        })
+    }
+    val fields =
+      if (totals.isEmpty) ModelFields else ModelFields ++ TotalsFields
+    spark.createDataFrame(rows.asJava, StructType(fields))
       .coalesce(1).write.mode("overwrite").parquet(path)
   }
 
@@ -186,6 +291,21 @@ object LinUcb {
           r.getSeq[Double](r.fieldIndex("a_inv")).toArray,
           r.getAs[Long]("n")))
         .sortBy(_.action).toSeq)
+  }
+
+  /** The [[Totals]] a model was saved with; None when it was saved
+    * without them or holds no action.
+    */
+  private[graft] def loadTotals(spark: SparkSession,
+                                path: String): Option[Totals] = {
+    val df = spark.read.parquet(path)
+    if (!TotalsFields.forall(f => df.columns.contains(f.name))) None
+    else {
+      val rows = df.select(col("batch_id"), col("action"),
+        struct("xx", "bx", "n")).collect()
+      rows.headOption.map(h => Totals(h.getLong(0),
+        rows.map(r => r.getInt(1) -> statsOf(r.getStruct(2))).toMap))
+    }
   }
 
   // ---- tiny dense linear algebra (d ≈ 20; no external dep) ------------

@@ -1,6 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Observation,
+  SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout,
   ListState, MapState, OutputMode, StatefulProcessor, StreamingQuery,
@@ -553,29 +554,68 @@ object Streams {
       .start()
 
   /** Scheduled retraining loop (A22, notebook.ipynb:1199 — cron
-    * every-30-min): each trigger re-fits on the accumulated training
-    * table and persists the refreshed model — `foreachBatch` over the
-    * stream of *new* rows, retrain over the *full* table, as the
-    * reference pipeline does (full re-ingest + re-train each run).
+    * every-30-min): each trigger adds its rows to the training table and
+    * persists a refreshed model. The reference re-ingests and re-trains
+    * on the full table each run; LinUCB's statistics are additive, so a
+    * trigger here costs O(batch) in two jobs:
+    *  - the batch's rows overwrite `trainingPath/batch=<id>` (the
+    *    [[idempotentAppendLoop]] shape), and the same write job observes
+    *    the batch's per-action statistics (`LinUcb.observeStats`);
+    *  - the driver adds them to the running [[graft.ml.LinUcb.Totals]],
+    *    solves θ and A⁻¹ (`LinUcb.solve`, d×d) and saves the model with
+    *    the totals and the batch id in extra columns.
+    *
+    * The totals stay in driver memory between batches. This call reads
+    * them once from the saved model; with no model they are empty, as
+    * before batch 0. On batch k:
+    *  - totals at batch k−1: add the batch's statistics;
+    *  - totals at batch k: a replay of a batch already counted (a crash
+    *    between the model save and the checkpoint commit), so the model
+    *    is saved again unchanged;
+    *  - otherwise (no model after batch 0, a model saved without totals,
+    *    or a gap in batch ids): one full refit over `trainingPath`,
+    *    whose result becomes the totals at batch k.
+    *
+    * So after any replay the table holds each input row once and the
+    * model equals `LinUcb.fit` over the table (up to summation order),
+    * with exact `n`. The table and the model belong to the checkpoint:
+    * a new checkpoint starts its batch ids at 0 again.
     */
   def retrainLoop(newRows: DataFrame, trainingPath: String,
                   modelPath: String, checkpoint: String, dim: Int,
                   trigger: Trigger =
-                    Trigger.ProcessingTime("30 minutes")): StreamingQuery =
+                    Trigger.ProcessingTime("30 minutes")): StreamingQuery = {
+    import graft.ml.LinUcb
+    var totals = {
+      val spark = newRows.sparkSession
+      val saved = new org.apache.hadoop.fs.Path(modelPath)
+      if (saved.getFileSystem(spark.sparkContext.hadoopConfiguration)
+          .exists(saved)) LinUcb.loadTotals(spark, modelPath)
+      else Some(LinUcb.Totals(-1L, Map.empty))
+    }
     newRows.writeStream
       .outputMode(OutputMode.Append())
       .trigger(trigger)
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row],
-                       _: Long) =>
+                       batchId: Long) =>
         val spark = batch.sparkSession
-        batch.write.mode("append").parquet(trainingPath)
-        val full = spark.read.parquet(trainingPath)
-        val model = graft.ml.LinUcb.fit(full, "action", "obs", "reward",
-          dim)
-        graft.ml.LinUcb.save(spark, model, modelPath)
+        val seen = new Observation()
+        LinUcb.observeStats(batch, seen, "action", "obs", "reward", dim)
+          .write.mode("overwrite").parquet(s"$trainingPath/batch=$batchId")
+        val next = totals match {
+          case Some(t) if t.batchId == batchId - 1 => LinUcb.Totals(batchId,
+            LinUcb.plus(t.stats, LinUcb.observedStats(seen)))
+          case Some(t) if t.batchId == batchId => t
+          case _ => LinUcb.Totals(batchId, LinUcb.collectStats(
+            spark.read.parquet(trainingPath), "action", "obs", "reward",
+            dim))
+        }
+        totals = Some(next)
+        LinUcb.save(spark, LinUcb.solve(next.stats, dim), next, modelPath)
       }
       .start()
+  }
 
   /** Streaming batch scorer + publish (A19/A20): score each micro-batch
     * with the current model and append predictions to a JSON "topic"

@@ -581,6 +581,178 @@ class StreamsSpec extends SparkSpec {
     } finally q.stop()
   }
 
+  // ---- retrainLoop over a file source: one micro-batch per file ------
+
+  private val RetrainDim = 4
+  /** Largest |got − want| over largest |want|, per array (θ and A⁻¹). */
+  private val RetrainTol = 1e-9
+
+  /** Writes input files `batches` (seeded (action, obs, reward) JSON
+    * lines, 5 actions) under `dir/topic`, each a later modification time,
+    * and returns their row count.
+    */
+  private def retrainInput(dir: String, batches: Range): Long = {
+    val topic = new java.io.File(s"$dir/topic")
+    topic.mkdirs()
+    batches.map { k =>
+      val rng = new scala.util.Random(4200L + k)
+      val lines = Seq.fill(30 + 7 * k) {
+        val obs = Seq.fill(RetrainDim)(rng.nextGaussian())
+        s"""{"action":${rng.nextInt(5)},"obs":[${obs.mkString(",")}],""" +
+          s""""reward":${obs.head * 0.5 + rng.nextDouble()}}"""
+      }
+      val f = new java.io.File(topic, f"in-$k%03d.json")
+      Files.write(f.toPath, lines.mkString("", "\n", "\n").getBytes("UTF-8"))
+      assert(f.setLastModified(1700000000000L + 1000L * k))
+      lines.size.toLong
+    }.sum
+  }
+
+  /** Runs `retrainLoop` over `dir/topic` until it has drained it; returns
+    * the ids of the batches that held rows.
+    */
+  private def runRetrain(dir: String): Seq[Long] = {
+    val q = Streams.retrainLoop(
+      spark.readStream.schema("action INT, obs ARRAY<DOUBLE>, reward DOUBLE")
+        .option("maxFilesPerTrigger", 1).json(s"$dir/topic"),
+      s"$dir/train", s"$dir/model", s"$dir/ckpt", RetrainDim,
+      Trigger.AvailableNow())
+    try assert(q.awaitTermination(120000), "drain did not terminate")
+    finally q.stop()
+    q.recentProgress.filter(_.numInputRows > 0).map(_.batchId).toSeq
+  }
+
+  /** Deletes batch `k`'s commit marker (and its checksum sibling, see the
+    * idempotentAppendLoop crash test), so a restart replays batch k.
+    */
+  private def dropCommit(dir: String, k: Long): Unit = {
+    val commits = new java.io.File(s"$dir/ckpt/commits")
+    assert(new java.io.File(commits, s"$k").delete(), s"no commit $k")
+    new java.io.File(commits, s".$k.crc").delete()
+  }
+
+  private def fitTable(dir: String): graft.ml.LinUcb.Model =
+    graft.ml.LinUcb.fit(spark.read.parquet(s"$dir/train"), "action", "obs",
+      "reward", RetrainDim)
+
+  private def assertSameModel(got: graft.ml.LinUcb.Model,
+                              want: graft.ml.LinUcb.Model,
+                              what: String): Unit = {
+    def err(g: Array[Double], w: Array[Double]) =
+      g.lazyZip(w).map((a, b) => math.abs(a - b)).max / w.map(math.abs).max
+    assert(got.actions.map(_.action) == want.actions.map(_.action), what)
+    got.actions.zip(want.actions).foreach { case (g, w) =>
+      assert(g.n == w.n, s"$what: action ${g.action} n ${g.n} != ${w.n}")
+      assert(err(g.theta, w.theta) <= RetrainTol,
+        s"$what: action ${g.action} theta off by ${err(g.theta, w.theta)}")
+      assert(err(g.aInv, w.aInv) <= RetrainTol,
+        s"$what: action ${g.action} A^-1 off by ${err(g.aInv, w.aInv)}")
+    }
+  }
+
+  test("retrainLoop: each micro-batch runs two jobs, and after N batches " +
+      "the model equals LinUcb.fit over the training table") {
+    val dir = Files.createTempDirectory("retrain-eq").toString
+    val rows = retrainInput(dir, 0 until 6)
+    // jobs by the streaming batch that ran them
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(js.properties).foreach { p =>
+          Option(p.getProperty("streaming.sql.batchId"))
+            .orElse(Option(p.getProperty("spark.jobGroup.id")))
+            .foreach(jobs.add)
+        }
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    val batches = try {
+      val ids = runRetrain(dir)
+      // the bus is ordered: once this job is seen, every earlier one is
+      sc.setJobGroup("retrain-eq-end", "end sentinel", false)
+      try spark.range(1).collect() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (!jobs.contains("retrain-eq-end") &&
+          System.nanoTime() < deadline) Thread.sleep(20)
+      ids
+    } finally sc.removeSparkListener(listener)
+    assert(batches == (0L until 6L))
+    import scala.jdk.CollectionConverters._
+    val perBatch = jobs.asScala.toSeq.filter(_.forall(_.isDigit))
+      .groupBy(identity).map { case (b, js) => b.toLong -> js.size }
+    assert(perBatch == batches.map(_ -> 2).toMap,
+      s"jobs per batch (row write + model save expected): $perBatch")
+
+    assert(spark.read.parquet(s"$dir/train").count() == rows)
+    val m = graft.ml.LinUcb.load(spark, s"$dir/model")
+    assert(m.actions.map(_.n).sum == rows)
+    assert(m.actions.size == 5)
+    assertSameModel(m, fitTable(dir), "loop vs fit")
+  }
+
+  test("retrainLoop replays a crashed batch without double counting " +
+      "(fails under mode(\"append\"))") {
+    val dir = Files.createTempDirectory("retrain-replay").toString
+    var rows = retrainInput(dir, 0 until 2)
+    assert(runRetrain(dir) == Seq(0L, 1L))
+    val afterBatch1 = new java.io.File(s"$dir/model-after-1")
+    org.apache.commons.io.FileUtils.copyDirectory(
+      new java.io.File(s"$dir/model"), afterBatch1)
+    rows += retrainInput(dir, 2 until 3)
+    assert(runRetrain(dir) == Seq(2L))
+    // the same input, never replayed
+    val clean = Files.createTempDirectory("retrain-clean").toString
+    retrainInput(clean, 0 until 3)
+    runRetrain(clean)
+    val want = graft.ml.LinUcb.load(spark, s"$clean/model")
+
+    def check(what: String): Unit = {
+      assert(spark.read.parquet(s"$dir/train").count() == rows, what)
+      val m = graft.ml.LinUcb.load(spark, s"$dir/model")
+      assert(m.actions.map(_.n).sum == rows, what)
+      assertSameModel(m, want, what)
+      assertSameModel(m, fitTable(dir), s"$what, vs fit")
+    }
+    check("no replay")
+    // (a) crash after batch 2's model save, before its commit: the saved
+    // model already counts batch 2
+    dropCommit(dir, 2)
+    assert(runRetrain(dir) == Seq(2L), "batch 2 was not replayed")
+    check("replay with the model at batch 2")
+    // (b) crash after batch 2's rows, before its model save: the saved
+    // model is batch 1's
+    dropCommit(dir, 2)
+    val model = new java.io.File(s"$dir/model")
+    org.apache.commons.io.FileUtils.deleteDirectory(model)
+    org.apache.commons.io.FileUtils.copyDirectory(afterBatch1, model)
+    assert(runRetrain(dir) == Seq(2L), "batch 2 was not replayed")
+    check("replay with the model at batch 1")
+  }
+
+  test("retrainLoop bootstraps with one full refit from a model saved " +
+      "without statistics, then continues incrementally") {
+    val dir = Files.createTempDirectory("retrain-boot").toString
+    var rows = retrainInput(dir, 0 until 2)
+    assert(runRetrain(dir) == Seq(0L, 1L))
+    // an existing table and a model saved by plain LinUcb.save (no xx,
+    // bx or batch_id): a model from another run, so not the table's fit
+    graft.ml.LinUcb.save(spark, graft.ml.LinUcb.fit(
+      spark.read.parquet(s"$dir/train").filter(col("batch") === 0),
+      "action", "obs", "reward", RetrainDim), s"$dir/model")
+    assert(!spark.read.parquet(s"$dir/model").columns.contains("xx"))
+    rows += retrainInput(dir, 2 until 3)
+    assert(runRetrain(dir) == Seq(2L))
+    val first = graft.ml.LinUcb.load(spark, s"$dir/model")
+    assert(first.actions.map(_.n).sum == rows)
+    assertSameModel(first, fitTable(dir), "bootstrap vs fit")
+    rows += retrainInput(dir, 3 until 5)
+    assert(runRetrain(dir) == Seq(3L, 4L))
+    val m = graft.ml.LinUcb.load(spark, s"$dir/model")
+    assert(m.actions.map(_.n).sum == rows)
+    assertSameModel(m, fitTable(dir), "after bootstrap vs fit")
+  }
+
   test("scoreAndPublish writes scored predictions to the topic path") {
     implicit val sqlCtx = spark.sqlContext
     val dir = Files.createTempDirectory("publish").toString
