@@ -257,4 +257,189 @@ class FeatureStoreSpec extends SparkSpec {
       } finally spark.sql("DROP TABLE IF EXISTS b_long_vals")
     }
   }
+
+  /** A store over a fresh root whose `users` entity type holds two
+    * imports of three entities.
+    */
+  private def withImported(f: (FeatureStore, String) => Unit): Unit = {
+    val root = graft.Sessions.tempDirDeletedOnExit("fsbucketed").toString
+    val fs = new FeatureStore(spark, root)
+    fs.createEntityType(EntityTypeDef("users", "user_id", Seq.empty))
+    fs.importFeatureValues("users", Seq((1L, 10.0), (2L, 5.0), (3L, 7.0))
+      .toDF("user_id", "rating"), "user_id", Some(ts("2024-01-01 00:00:00")))
+    fs.importFeatureValues("users", Seq((1L, 20.0), (3L, 8.0))
+      .toDF("user_id", "rating"), "user_id", Some(ts("2024-03-01 00:00:00")))
+    f(fs, root)
+  }
+
+  private def sameRows(a: DataFrame, b: DataFrame): Boolean =
+    a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty
+
+  private val hashExchanges = "Exchange hashpartitioning".r
+
+  private def pitQueries = Seq((1L, ts("2024-02-01 00:00:00")),
+    (1L, ts("2024-04-01 00:00:00")), (2L, ts("2023-12-01 00:00:00")),
+    (3L, ts("2024-03-01 00:00:00"))).toDF("user_id", "as_of")
+
+  test("the store's values are bucketed: pointInTime shuffles only the " +
+      "queries and latestOnlineView plans no Exchange") {
+    withImported { (fs, _) =>
+      val pit = fs.pointInTime("users", pitQueries, "user_id", "as_of",
+        Seq("rating"))
+      val plan = physical(pit).toString
+      assert(!plan.contains("Join"), plan)
+      assert(hashExchanges.findAllMatchIn(plan).size == 1, plan)
+      assert(pit.select("as_of", "asof_rating").as[(Timestamp,
+        Option[Double])].collect().toSet == Set(
+        ts("2024-02-01 00:00:00") -> Some(10.0),
+        ts("2024-04-01 00:00:00") -> Some(20.0),
+        ts("2023-12-01 00:00:00") -> None,
+        ts("2024-03-01 00:00:00") -> Some(8.0)))
+      val online = fs.latestOnlineView("users", "user_id", "rating")
+      assert(!physical(online).toString.contains("Exchange"),
+        physical(online))
+      assert(online.select("user_id", "rating").as[(Long, Double)]
+        .collect().toSet == Set((1L, 20.0), (2L, 5.0), (3L, 8.0)))
+    }
+  }
+
+  test("a new store over an existing root, its table gone from the " +
+      "catalog, reads the same rows through the bucketed plan") {
+    withImported { (fs, root) =>
+      def rows(f: FeatureStore) = f.readValues("users")
+        .select("user_id", "feature_ts", "rating")
+        .as[(Long, Timestamp, Double)].collect().sorted.toSeq
+      val before = rows(fs)
+      spark.sql(s"DROP TABLE ${fs.meta("users").table}")
+      val reopened = new FeatureStore(spark, root)
+      assert(rows(reopened) == before)
+      val plan = physical(reopened.pointInTime("users", pitQueries,
+        "user_id", "as_of", Seq("rating"))).toString
+      assert(hashExchanges.findAllMatchIn(plan).size == 1, plan)
+      // and it imports into the re-registered table
+      reopened.importFeatureValues("users", Seq((2L, 6.0))
+        .toDF("user_id", "rating"), "user_id", Some(ts("2024-05-01 00:00:00")))
+      assert(reopened.readValues("users").count() == before.size + 1)
+    }
+  }
+
+  test("compactBucketed: at the store's bucket count a registration " +
+      "that DROP TABLE leaves intact; at another count the same rows") {
+    withImported { (fs, _) =>
+      val b = fs.meta("users").buckets
+      assert(b == spark.sparkContext.defaultParallelism)
+      val values = fs.readValues("users")
+      try {
+        fs.compactBucketed("users", "user_id", "b_same", b)
+        assert(sameRows(spark.table("b_same").drop("__import"), values))
+        fs.compactBucketed("users", "user_id", "b_other", b + 1)
+        assert(sameRows(spark.table("b_other"), values))
+        spark.sql("DROP TABLE b_same")
+        assert(fs.readValues("users").count() == 5)
+        assert(sameRows(fs.readValues("users"), spark.table("b_other")))
+      } finally {
+        spark.sql("DROP TABLE IF EXISTS b_same")
+        spark.sql("DROP TABLE IF EXISTS b_other")
+      }
+    }
+  }
+
+  test("deleteEntityType drops the values table from the catalog") {
+    withImported { (fs, _) =>
+      val table = fs.meta("users").table
+      assert(spark.catalog.tableExists(table))
+      fs.deleteEntityType("users")
+      assert(!spark.catalog.tableExists(table))
+      assert(fs.listEntityTypes().isEmpty)
+    }
+  }
+
+  test("an import whose columns differ from the table's is refused") {
+    import org.apache.spark.sql.AnalysisException
+    withImported { (fs, _) =>
+      val at = Some(ts("2024-06-01 00:00:00"))
+      val rows = Seq((1L, 1.0)).toDF("user_id", "rating")
+      intercept[AnalysisException](fs.importFeatureValues("users",
+        rows.withColumn("extra", lit(1)), "user_id", at))
+      intercept[AnalysisException](fs.importFeatureValues("users",
+        rows.drop("rating"), "user_id", at))
+      intercept[AnalysisException](fs.importFeatureValues("users",
+        rows.withColumnRenamed("rating", "score"), "user_id", at))
+      // another column order is matched by name
+      fs.importFeatureValues("users", rows.select("rating", "user_id"),
+        "user_id", at)
+      assert(fs.readValues("users").filter($"feature_ts" === at.get)
+        .select("user_id", "rating").as[(Long, Double)].collect().toSeq ==
+        Seq((1L, 1.0)))
+    }
+  }
+
+  test("meta.json is JSON: quotes and backslashes round-trip and the " +
+      "store reopens") {
+    val root = graft.Sessions.tempDirDeletedOnExit("fsmeta").toString
+    val odd = "say \"hi\" \\ bye"
+    new FeatureStore(spark, root).createEntityType(EntityTypeDef("users",
+      "user_id", Seq(FeatureDef("rating", "DOUBLE", odd)), odd))
+    val parsed = new com.fasterxml.jackson.databind.ObjectMapper()
+      .readTree(new java.io.File(s"$root/users/meta.json"))
+    assert(parsed.get("description").asText == odd)
+    assert(parsed.get("features").get(0).get("description").asText == odd)
+    val reopened = new FeatureStore(spark, root)
+    assert(reopened.meta("users").features == Seq(
+      FeatureDef("rating", "DOUBLE", odd)))
+    reopened.importFeatureValues("users", Seq((1L, 2.0))
+      .toDF("user_id", "rating"), "user_id", Some(ts("2024-01-01 00:00:00")))
+    assert(reopened.readValues("users").count() == 1)
+  }
+
+  test("streamingImport survives a crash-replay: the same rows as an " +
+      "uncrashed run, at most one file per bucket per micro-batch") {
+    import org.apache.spark.sql.streaming.Trigger
+    val dir = graft.Sessions.tempDirDeletedOnExit("fsreplay").toString
+    (0 until 3).foreach { k =>
+      (0 until 20).map(i => (i % 7).toLong -> (k * 100 + i).toDouble)
+        .toDF("user_id", "rating")
+        .withColumn("event_ts", timestamp_seconds(lit(1700000000L + k)))
+        .coalesce(1).write.json(s"$dir/topic/k=$k")
+    }
+    /** Imports the topic, three files, one per batch; returns the store. */
+    def run(name: String, crash: Boolean): FeatureStore = {
+      val fs = new FeatureStore(spark, s"$dir/$name")
+      fs.createEntityType(EntityTypeDef("users", "user_id", Seq.empty))
+      def fire(): Unit = {
+        val q = fs.streamingImport("users", spark.readStream
+            .schema("user_id LONG, rating DOUBLE, event_ts TIMESTAMP")
+            .option("maxFilesPerTrigger", 1).json(s"$dir/topic/*"),
+          "event_ts", s"$dir/$name/ckpt", Trigger.AvailableNow())
+        try assert(q.awaitTermination(120000), "drain did not terminate")
+        finally q.stop()
+      }
+      fire()
+      if (crash) {
+        val commits = new java.io.File(s"$dir/$name/ckpt/commits")
+        val last = commits.listFiles().filter(_.getName.forall(_.isDigit))
+          .maxBy(_.getName.toLong)
+        assert(last.getName == "2" && last.delete())
+        new java.io.File(commits, s".${last.getName}.crc").delete()
+        fire() // restart from the checkpoint: batch 2 runs again
+      }
+      fs
+    }
+    val clean = run("clean", crash = false).readValues("users")
+    val crashed = run("crashed", crash = true)
+    val replayed = crashed.readValues("users")
+    assert(clean.count() == 60)
+    assert(sameRows(replayed, clean), s"${replayed.count()} rows after " +
+      "the replay, 60 without it")
+    val b = crashed.meta("users").buckets
+    val parts = new java.io.File(s"$dir/crashed/users/values").listFiles()
+      .filter(_.getName.startsWith("__import=s-"))
+    assert(parts.length == 3)
+    parts.foreach { p =>
+      val files = p.list().filter(_.endsWith(".parquet"))
+      val buckets = files.map(_.split("_").last.takeWhile(_ != '.'))
+      assert(files.length <= b && buckets.distinct.length == files.length,
+        files.mkString(", "))
+    }
+  }
 }
