@@ -4,8 +4,6 @@ import org.apache.spark.sql.functions._
 
 import org.apache.spark.sql.types._
 
-import graft.Hints.MergeHintOps
-
 import graft.text.{Dedup, PQ, Rank, Similarity, Sketches, TextOps}
 
 /** Text/LLM-data operators (dedup, tokens, quality, language-ID,
@@ -529,10 +527,11 @@ object TextQueries {
     // Registered plan is the Manku permuted-block form (2^-40 random-
     // collision floor): the 4x16-bit band join's candidate space is
     // measured quadratic at corpus scale (4·n²/2^16 — 2.39B candidate
-    // pairs at 500k docs, gen-sf10 sweep) while the blocked form is
-    // spec-pinned bit-for-bit output-identical (TextSpec) at the same
-    // bench-scale wall. simhashPairs stays as the banded shape the md5
-    // oracle twin mirrors (DuckDB-expressible).
+    // pairs at 500k docs, gen-sf10 sweep) while the blocked form's
+    // pair set is spec-pinned to the brute-force hamming <= 3 self-join
+    // (TextSpec). The 4x16-bit band keys (Dedup.simhashBandKeys) stay
+    // only as the banded shape the md5 oracle twin mirrors
+    // (DuckDB-expressible).
     QuerySpec.rowsOnly("q_dedup_simhash") { (s, dir) =>
       Dedup.simhashPairsBlocked(Q.t(s, dir, "documents"), "text", "doc_id",
           maxHamming = 3)
@@ -634,7 +633,7 @@ object TextQueries {
           transform(sequence(lit(0), lit(k - 1)), j =>
             md5(concat(j.cast(StringType), lit("|"), col("sh1"))))
             .as("hs"))
-      val sigs = docShingle.mergeHint.join(hashes.mergeHint, "sh1")
+      val sigs = docShingle.hint("merge").join(hashes.hint("merge"), "sh1")
         .groupBy("doc_id")
         .agg(aggregate(collect_list(col("hs")),
           array_repeat(lit("~"), k),
@@ -1596,7 +1595,7 @@ object TextQueries {
         .agg(countDistinct(col("doc_id")).as("nd"))
         .filter(col("nd") >= 2)
         .select(col("span"), lit(1L).as("__dup"))
-      spans.mergeHint.join(dup.mergeHint, Seq("span"), "left")
+      spans.hint("merge").join(dup.hint("merge"), Seq("span"), "left")
         .groupBy("doc_id")
         .agg(count(lit(1)).as("n_spans"),
           sum(coalesce(col("__dup"), lit(0L))).as("n_dup_spans"))

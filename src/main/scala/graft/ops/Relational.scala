@@ -7,8 +7,6 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.internal.SQLConf
 
-import graft.Hints.MergeHintOps
-
 /** Relational operator library backing SURVEY.md §2.2. Everything here is
   * declarative DataFrame composition — Catalyst keeps pushdown/pruning/AQE
   * working through these helpers.
@@ -244,8 +242,8 @@ object Relational {
     // sweep caught the sibling defect failing at 8 GiB in the SimHash
     // band join). SMJ is what correct stats would pick; AQE still
     // handles skew/coalesce on the shuffle.
-    banded(a, aStart, aEnd).as("a").mergeHint
-      .join(banded(b, bStart, bEnd).as("b").mergeHint,
+    banded(a, aStart, aEnd).as("a").hint("merge")
+      .join(banded(b, bStart, bEnd).as("b").hint("merge"),
         col("a.__bkt") === col("b.__bkt") &&
           col(aStart) <= col(bEnd) && col(bStart) <= col(aEnd) &&
           col("a.__bkt") === floor(unix_micros(

@@ -534,8 +534,13 @@ object Streams {
           pmod(xxhash64(col(keyCol)), lit(numBuckets.toLong)))
         val touched = bucketed.select("__bucket").distinct()
           .collect().map(_.getLong(0))
+        // through the path's own FileSystem: a java.io.File check reads
+        // a `file:` URI or a remote path as absent, and the overwrite
+        // below would then drop the touched buckets' earlier keys
+        val table = new org.apache.hadoop.fs.Path(path)
         val existing =
-          if (new java.io.File(path).exists())
+          if (table.getFileSystem(spark.sparkContext.hadoopConfiguration)
+              .exists(table))
             spark.read.parquet(path)
               .filter(col("__bucket").isin(touched: _*))
           else spark.emptyDataFrame

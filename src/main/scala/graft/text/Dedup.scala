@@ -6,8 +6,6 @@ import org.apache.spark.sql.functions._
 
 import org.apache.spark.sql.types._
 
-import graft.Hints.MergeHintOps
-
 /** Near-duplicate detection: exact, n-gram Jaccard, MinHash+LSH, SimHash.
   *
   * Scale design (100 TB): nothing here ever materializes the n² pair
@@ -20,7 +18,7 @@ import graft.Hints.MergeHintOps
   * fed to the one helper [[bandPairs]]. Verification touches only the
   * candidates.
   *
-  * Caching contract: the pair builders (`minhashPairs`, `simhashPairs`,
+  * Caching contract: the pair builders (`minhashPairs`,
   * `simhashPairsBlocked`, `simhashPairsWide`) `cache()` their
   * fingerprint/shingle intermediates and do NOT unpersist them (the
   * returned DataFrame is lazy; the intermediate must outlive this
@@ -29,8 +27,7 @@ import graft.Hints.MergeHintOps
   * once per execution since the band self-joins went (r21), so their
   * cache only saves re-fingerprinting when the returned DataFrame is
   * executed more than once. Callers running many pipelines in one
-  * session (e.g. SlopeProbe) should `spark.catalog.clearCache()`
-  * between them.
+  * session should `spark.catalog.clearCache()` between them.
   *
   * Join strategy: the corpus×corpus JOINs left here are the MinHash
   * verification attaches ([[verifyJaccard]]) and the probe × corpus
@@ -220,8 +217,8 @@ object Dedup {
         posts(corpus).withColumn("df", count(lit(1)).over(byShingle))
           .filter(col("df") <= maxDf).drop("df")
       }
-    posts(probe).as("p").mergeHint.join(
-        corpusPosts.as("c").mergeHint,
+    posts(probe).as("p").hint("merge").join(
+        corpusPosts.as("c").hint("merge"),
         col("p.s") === col("c.s"))
       .groupBy(col("p.doc_id").as("probe_id"),
         col("c.doc_id").as("corpus_id"), col("p.sz").as("sz_p"))
@@ -238,11 +235,11 @@ object Dedup {
   def verifyJaccard(cand: DataFrame, sets: DataFrame,
                     minJaccard: Double): DataFrame =
     cand
-      .mergeHint
+      .hint("merge")
       .join(sets.select(col("doc_id").as("doc_a"), col("sh").as("sh_a"))
-        .mergeHint, "doc_a")
+        .hint("merge"), "doc_a")
       .join(sets.select(col("doc_id").as("doc_b"), col("sh").as("sh_b"))
-        .mergeHint, "doc_b")
+        .hint("merge"), "doc_b")
       .withColumn("n_inter",
         size(array_intersect(col("sh_a"), col("sh_b"))).cast(LongType))
       .withColumn("n_union",
@@ -493,7 +490,10 @@ object Dedup {
 
   /** The 4×16-bit band keys of a 64-bit fingerprint: key i = bits
     * [16i, 16i + 16). Hamming distance ≤ 3 leaves at least one of the 4
-    * bands intact (pigeonhole), so some key is shared.
+    * bands intact (pigeonhole), so some key is shared. Only the md5
+    * oracle twin of `q_dedup_simhash` bands on these (the shape DuckDB
+    * can express); the production forms are [[simhashPairsBlocked]] and
+    * [[simhashPairsWide]].
     */
   def simhashBandKeys(fp: Column): Column =
     array((0 until 4).map(b => shiftright(fp, b * 16).bitwiseAND(65535L))
@@ -528,17 +528,6 @@ object Dedup {
       .filter(col("hamming") <= maxHamming)
       .select("doc_a", "doc_b", "hamming")
 
-  /** SimHash near-dup pairs with hamming distance <= maxHamming over the
-    * 4×16-bit bands of [[simhashBandKeys]], then exact popcount
-    * verification.
-    */
-  def simhashPairs(df: DataFrame, textCol: String, idCol: String,
-                   maxHamming: Int): DataFrame = {
-    require(maxHamming <= 3, "4-band scheme guarantees recall only to 3")
-    val fps = simhashTable(df, textCol, idCol).cache()
-    simhashVerified(fps, Seq("fp"), simhashBandKeys(col("fp")), maxHamming)
-  }
-
   /** 128-bit SimHash fingerprint — the WIDE form that keeps banded
     * near-dup search linear at corpus scale. The 64-bit scheme's
     * 4×16-bit bands collide at random with probability 2^-16 per band,
@@ -572,8 +561,9 @@ object Dedup {
 
   /** SimHash near-dup pairs over the 128-bit fingerprint: the 4×32-bit
     * bands of [[simhashWideBandKeys]], distance ≤ 3 ⇒ one band exact —
-    * identical structure to [[simhashPairs]], collision floor 2^-32
-    * per band instead of 2^-16. The corpus-scale form.
+    * the pigeonhole structure of the 4×16-bit [[simhashBandKeys]], with
+    * a collision floor of 2^-32 per band instead of 2^-16. The
+    * corpus-scale form.
     */
   def simhashPairsWide(df: DataFrame, textCol: String, idCol: String,
                        maxHamming: Int): DataFrame = {
@@ -583,8 +573,9 @@ object Dedup {
       simhashWideBandKeys(col("fp_lo"), col("fp_hi")), maxHamming)
   }
 
-  /** SimHash near-dup pairs with OUTPUT IDENTICAL to [[simhashPairs]]
-    * but a collision floor of 2^-40 instead of 2^-16 — the
+  /** SimHash near-dup pairs with hamming distance <= maxHamming over
+    * the 64-bit [[simhashTable]] fingerprint, with a collision floor of
+    * 2^-40 instead of the 4×16-bit bands' 2^-16 — the
     * permuted-block scheme of Manku et al. (WWW'07, public paper) on
     * the same 64-bit fingerprint: split into 8 blocks of 8 bits; ≤ 3
     * errors corrupt ≤ 3 blocks, so ≥ 5 blocks survive intact and the
@@ -595,8 +586,9 @@ object Dedup {
     * (vs 4) but random key collisions are
     * ~56·n²/2^41 — negligible into the trillions of documents, where
     * the 4×16-bit scheme's 4·n²/2^17 goes quadratic (measured: 2.39B
-    * candidate pairs at 500k docs). Same exact-popcount verification;
-    * same pair set out, bit for bit.
+    * candidate pairs at 500k docs). Exact-popcount verification, so
+    * the pair set is the brute-force hamming ≤ maxHamming self-join's
+    * (TextSpec pins it on real documents).
     */
   def simhashPairsBlocked(df: DataFrame, textCol: String, idCol: String,
                           maxHamming: Int): DataFrame = {

@@ -6,8 +6,6 @@ import org.apache.spark.sql.functions._
 
 import org.apache.spark.sql.types._
 
-import graft.Hints.MergeHintOps
-
 /** Similarity search over embedding columns (ARRAY<FLOAT>), north_star
   * surface: brute-force cosine top-k as the exact baseline, plus a
   * sign-LSH bucketed variant as the 100 TB scale path.
@@ -465,7 +463,7 @@ object Similarity {
       col("qv").as("qa"), col("n2").as("na2"))
     val rhs = base.select(col("bucket"), col("id").as("id_b"),
       col("qv").as("qb"), col("n2").as("nb2"))
-    lhs.mergeHint.join(rhs.mergeHint, Seq("bucket"))
+    lhs.hint("merge").join(rhs.hint("merge"), Seq("bucket"))
       .filter(col("id_b") > col("id_a"))
       .withColumn("cosine",
         qcosine(col("qa"), col("na2"), col("qb"), col("nb2")))

@@ -538,14 +538,16 @@ class StreamsSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("upsertLoop merges latest-per-key, rewriting only touched " +
-      "buckets") {
+  /** Two micro-batches through `upsertLoop` at `table`: keys 1, 2, then
+    * an update of key 1 and an insert of key 3. Returns the table's
+    * (key, score) rows. */
+  private def upsertTwoBatches(dir: String, table: String,
+                               numBuckets: Int): Set[(Long, Double)] = {
     implicit val sqlCtx = spark.sqlContext
-    val dir = Files.createTempDirectory("upsert").toString
     val in = MemoryStream[(Long, Double, Timestamp)]
     val q = Streams.upsertLoop(
       in.toDF().toDF("user_id", "score", "updated"),
-      s"$dir/table", "user_id", "updated", numBuckets = 4,
+      table, "user_id", "updated", numBuckets,
       s"$dir/ckpt", Trigger.ProcessingTime("0 seconds"))
     try {
       in.addData((1L, 1.0, ts("2024-01-01 00:00:00")),
@@ -554,10 +556,24 @@ class StreamsSpec extends SparkSpec {
       in.addData((1L, 9.0, ts("2024-02-01 00:00:00")),  // update key 1
         (3L, 3.0, ts("2024-02-01 00:00:00")))           // insert key 3
       q.processAllAvailable()
-      val out = spark.read.parquet(s"$dir/table")
+      spark.read.parquet(table)
         .select("user_id", "score").as[(Long, Double)].collect().toSet
-      assert(out == Set((1L, 9.0), (2L, 2.0), (3L, 3.0)))
     } finally q.stop()
+  }
+
+  test("upsertLoop merges latest-per-key, rewriting only touched " +
+      "buckets") {
+    val dir = Files.createTempDirectory("upsert").toString
+    assert(upsertTwoBatches(dir, s"$dir/table", numBuckets = 4) ==
+      Set((1L, 9.0), (2L, 2.0), (3L, 3.0)))
+  }
+
+  test("upsertLoop on a file: URI keeps the earlier keys of a touched " +
+      "bucket") {
+    val dir = Files.createTempDirectory("upsert_uri").toString
+    // one bucket: the second batch touches the bucket holding key 2
+    assert(upsertTwoBatches(dir, s"file://$dir/table", numBuckets = 1) ==
+      Set((1L, 9.0), (2L, 2.0), (3L, 3.0)))
   }
 
   test("retrainLoop re-fits and persists the model each trigger (A22)") {

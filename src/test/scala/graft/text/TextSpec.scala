@@ -190,7 +190,7 @@ class TextSpec extends SparkSpec {
       (2L, "the quick brown fox jumps over the lazy dog"),
       (3L, "entirely different words appear here tonight"))
       .toDF("doc_id", "text")
-    val pairs = Dedup.simhashPairs(df, "text", "doc_id", 3)
+    val pairs = Dedup.simhashPairsBlocked(df, "text", "doc_id", 3)
       .select("doc_a", "doc_b", "hamming")
       .as[(Long, Long, Long)].collect().toSet
     assert(pairs.contains((1L, 2L, 0L)))
@@ -233,19 +233,25 @@ class TextSpec extends SparkSpec {
     assert(realPairs == realBrute)
   }
 
-  test("64-bit simhash: recall exact vs the brute-force hamming <= 3 " +
-    "self-join on real documents") {
-    val pairs = Dedup.simhashPairs(docs, "text", "doc_id", 3)
-      .select("doc_a", "doc_b", "hamming")
-      .as[(Long, Long, Long)].collect().toSet
-    val fps = Dedup.simhashTable(docs, "text", "doc_id")
+  /** (doc_a, doc_b, hamming) of every 64-bit [[Dedup.simhashTable]]
+    * pair at hamming <= 3, by a brute-force self-join. */
+  private def bruteSimhash64(df: org.apache.spark.sql.DataFrame) = {
+    val fps = Dedup.simhashTable(df, "text", "doc_id")
     val a = fps.select($"doc_id".as("ida"), $"fp".as("fa"))
     val b = fps.select($"doc_id".as("idb"), $"fp".as("fb"))
-    val brute = a.join(b, $"ida" < $"idb")
+    a.join(b, $"ida" < $"idb")
       .withColumn("d", Dedup.hamming($"fa", $"fb"))
       .filter($"d" <= 3)
       .select($"ida", $"idb", $"d".cast("long"))
       .as[(Long, Long, Long)].collect().toSet
+  }
+
+  test("64-bit simhash: recall exact vs the brute-force hamming <= 3 " +
+    "self-join on real documents") {
+    val pairs = Dedup.simhashPairsBlocked(docs, "text", "doc_id", 3)
+      .select("doc_a", "doc_b", "hamming")
+      .as[(Long, Long, Long)].collect().toSet
+    val brute = bruteSimhash64(docs)
     // the planted near-dups make this non-vacuous
     assert(brute.nonEmpty)
     assert(pairs == brute)
@@ -272,20 +278,17 @@ class TextSpec extends SparkSpec {
       Set((1L, 2L, "x", "y"), (4L, 5L, "r", "s")))
   }
 
-  test("blocked simhash (8x8-bit, C(8,5) tables) reproduces the " +
-    "4x16-band pair set bit-for-bit on real documents") {
-    val docs = graft.io.Tables.table(spark, "/root/testdata/sf0.001",
-      "documents")
-    def pairs(fn: => org.apache.spark.sql.DataFrame) =
-      fn.select("doc_a", "doc_b", "hamming")
-        .as[(Long, Long, Long)].collect().toSet
-    val banded = pairs(Dedup.simhashPairs(docs, "text", "doc_id", 3))
-    val blocked = pairs(Dedup.simhashPairsBlocked(docs, "text",
-      "doc_id", 3))
-    // same fingerprints, same exact verification -> identical output;
-    // the planted near-dup corpus makes this non-vacuous
-    assert(banded.nonEmpty)
-    assert(blocked == banded)
+  test("blocked simhash (8x8-bit, C(8,5) tables) equals the " +
+    "brute-force hamming <= 3 self-join bit-for-bit on real documents") {
+    val blocked = Dedup.simhashPairsBlocked(docs, "text", "doc_id", 3)
+      .select("doc_a", "doc_b", "hamming")
+      .as[(Long, Long, Long)].collect().toSet
+    val brute = bruteSimhash64(docs)
+    // the planted near-dups hold pairs at every distance 0..3, so a
+    // block key that only matches identical fingerprints, or an
+    // off-by-one in the hamming filter, shows
+    assert((0L to 3L).forall(d => brute.exists(_._3 == d)))
+    assert(blocked == brute)
   }
 
   test("wide simhash collapses the random-collision candidate space " +

@@ -2,9 +2,7 @@
 # Power-law graph-family sweep (VERDICT r14 item 1 — the tool r14 built
 # and never ran): dump q_pagerank / q_graph_triangles / q_graph_degree
 # at each gendata/pl-sf* dir passed, DuckDB-compare each, append
-# PASS/FAIL rows to sweeps/sweep_spot_sf30.jsonl, then record the
-# SlopeProbe `graph` analytics (distinct co-occurring pairs + both
-# wedge orientations vs n_supp) to sweeps/sweep_graph.jsonl.
+# PASS/FAIL rows to sweeps/sweep_spot_sf30.jsonl.
 #
 # Comparator routing now lives in tools/compare.py (SLICED_ROUTE +
 # route_sliced — VERDICT r15 item 4): compare.py probes the driver
@@ -78,11 +76,5 @@ for dir in "$@"; do
     echo "[pl $(date +%H:%M:%S)] $name/$q: $st (${dt}s, $cmp)" | tee -a "$LOG"
     if [ $st = fail ] || [ $st = error ]; then tail -3 /tmp/pl_one.log | tee -a "$LOG"; fi
   done
-  if ! grep -q "\"sf\":\"$dir\",\"mode\":\"graph\"" sweeps/sweep_graph.jsonl 2>/dev/null; then
-    echo "[pl $(date +%H:%M:%S)] SlopeProbe graph @ $dir" | tee -a "$LOG"
-    env SPARK_GRAFT_CPUS=16 ${parts:+SPARK_GRAFT_SHUFFLE_PARTS=$parts} \
-      sbt -batch "runMain graft.tools.SlopeProbe $dir graph" >> "$LOG" 2>&1
-    echo "[pl] probe rc=$?" | tee -a "$LOG"
-  fi
 done
 echo "[pl] done" | tee -a "$LOG"
